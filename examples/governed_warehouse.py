@@ -93,10 +93,10 @@ def build_mart(spark, sf_dir: str, out_dir: str):
 
 
 def main() -> None:
-    from popelines_spark.session import get_spark
+    from popelines_spark.session import get_spark, scratch_dir
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/popelines_spark_scratch/governed"
+    out_dir = sys.argv[2] if len(sys.argv) > 2 else scratch_dir("governed")
     spark = get_spark(app_name="governed_warehouse_example")
     counts = build_mart(spark, sf_dir, out_dir)
     for name, n in sorted(counts.items()):

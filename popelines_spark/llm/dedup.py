@@ -98,7 +98,8 @@ def minhash_signatures(
     # min-aggregate collapses fully in the scan stage and its Exchange
     # disappears (2 -> 1, plan-pinned); round-robin scattered each id
     # across every partition, shipping ~n_partitions partial states per
-    # id. Measured 0.9x/0.72x on fuzzy/ngram (tools/exp_spread_key.py).
+    # id. Measured 0.9x/0.72x on fuzzy/ngram
+    # (tools/exp_spread_key.py @ b9babdb).
     df = spread_by(df, id_col)
     sh = df.select(
         F.col(id_col),
@@ -176,8 +177,8 @@ def minhash_lsh_pairs(
     sig_a = sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
     sig_b = sig.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
     cand = cand.join(sig_a, "id_a").join(sig_b, "id_b")
-    # r13 examined, kept as-is (tools/exp_fuzzy_agree.py): unrolling this
-    # fold into a 64-term element_at comparison chain ("codegen instead
+    # r13 examined, kept as-is (tools/exp_fuzzy_agree.py @ b9babdb): unrolling
+    # this fold into a 64-term element_at comparison chain ("codegen instead
     # of interpreted HOF") measured SLOWER — 3.97 vs 2.92 s interleaved
     # minima, identical output — the giant expression tree loses to
     # Spark 4's HOF evaluation at this width. The 20x HOF penalty
@@ -517,7 +518,7 @@ def ngram_jaccard_pairs(
     # from broadcast to shuffle, which costs more than the duplicated
     # window pipeline saves. Same story for the `sets` build below.
     # Re-tested with explicit F.broadcast() hints pinning the join
-    # strategy (tools/exp_ngram2.py): STILL slower — A 2.66 s vs
+    # strategy (tools/exp_ngram2.py @ b9babdb): STILL slower — A 2.66 s vs
     # ckpt(prefix+sets)+hints 4.73 s vs ckpt(sets)+hints 3.11 s
     # interleaved minima. The duplicated branches are independent
     # subtrees that the scheduler runs CONCURRENTLY on otherwise-idle
@@ -545,8 +546,8 @@ def ngram_jaccard_pairs(
     #    J >= t needs overlap >= t/(1+t) * (|A|+|B|). Non-minimal matches
     #    may be pruned spuriously, but the minimal one always survives for
     #    a qualifying pair, so completeness holds.
-    # r14 examined, kept as-is (tools/exp_ngram_match_count.py, VERDICT
-    # r13 next #2): the MATCH-COUNT aggregate bound — replace this
+    # r14 examined, kept as-is (tools/exp_ngram_match_count.py @ b9babdb,
+    # VERDICT r13 next #2): the MATCH-COUNT aggregate bound — replace this
     # distinct with a groupBy(id_a, id_b) counting the m prefix-prefix
     # matches and taking the LAST match's ranks (ra, rb), then prune on
     # overlap <= m + min(|A|-ra, |B|-rb), which is strictly tighter than
@@ -564,8 +565,8 @@ def ngram_jaccard_pairs(
     # shingle sits late in both prefixes, which real near-dup text does
     # not produce. Full PPJoin+ suffix filtering would add per-pair
     # mid-set probes (interpreted element_at/HOF work, the
-    # exp_fuzzy_agree.py trade) on top of a candidate set it cannot
-    # shrink here — rejected; the verify join's array_intersect CPU
+    # tools/exp_fuzzy_agree.py @ b9babdb trade) on top of a candidate set it
+    # cannot shrink here — rejected; the verify join's array_intersect CPU
     # stands as the operator's honest cost.
     overlap_ub = F.lit(1) + F.least(
         F.col("__na") - F.col("__rka"), F.col("__nb") - F.col("__rkb")
@@ -589,9 +590,9 @@ def ngram_jaccard_pairs(
     sets = sh_rows.groupBy(id_col).agg(F.collect_list("__h").alias("__sh"))
     sets_a = sets.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("sh_a"))
     sets_b = sets.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("sh_b"))
-    # r13 examined, kept as-is (tools/exp_verify_once.py): the optimizer
-    # pushes the jaccard test below into the verify join's condition AND
-    # keeps a copy in the output Project (the plan shows array_intersect
+    # r13 examined, kept as-is (tools/exp_verify_once.py @ b9babdb): the
+    # optimizer pushes the jaccard test below into the verify join's condition
+    # AND keeps a copy in the output Project (the plan shows array_intersect
     # in both), which LOOKS like a 2x-per-candidate evaluation — but a
     # single-evaluation rewrite (project (|A∩B|,|A|,|B|) once behind a
     # lazy barrier, rebuild the identical IEEE expression from scalars)

@@ -60,13 +60,17 @@ the same Hadoop FS calls that run against s3a:// and gs://.
 from __future__ import annotations
 
 import json
+import logging
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
 from popelines_spark.io import _align_to, _hadoop_fs, table_path
 from popelines_spark.operators.par import rebalance_output
 from popelines_spark.schemas import merge_schemas
+
+_log = logging.getLogger(__name__)
 
 _COMMIT = "_COMMITTED"
 _LEGACY = object()  # sentinel: manifest predates parent tracking
@@ -696,15 +700,6 @@ def _commit_manifest(
     history REPAIR (the retract-restore paths, which reconstruct a
     deleted manifest verbatim for a child that raced in) and for tests
     that fabricate divergent legacy histories to exercise heal."""
-    if os.environ.get("POPELINES_MANIFEST_TRACE"):
-        import threading
-
-        print(
-            f"TRACE commit v={version} op={op} parent={parent} "
-            f"nfiles={len(set(files))} bid={batch_id} "
-            f"thr={threading.get_ident() % 1000}",
-            flush=True,
-        )
     if enforce_linear:
         # segment materialization happens BEFORE the lock: chunks are
         # content-addressed and parent-independent, so writing them
@@ -746,12 +741,17 @@ def _commit_manifest(
 
         _with_commit_lock(fs, vroot, jvm, _flip)
         return
-    HPath = jvm.org.apache.hadoop.fs.Path
-    vdir = f"{vroot}/{version}"
-    fs.mkdirs(HPath(vdir))
     # set-dedupe: reconciliation unions may hand the same immutable
     # file twice; a duplicate path would double-read its rows
     listed = sorted(set(files))
+    _log.debug(
+        "commit v=%s op=%s parent=%s nfiles=%d bid=%s thr=%d",
+        version, op, parent, len(listed), batch_id,
+        threading.get_ident() % 1000,
+    )
+    HPath = jvm.org.apache.hadoop.fs.Path
+    vdir = f"{vroot}/{version}"
+    fs.mkdirs(HPath(vdir))
     doc = {
         "version": version,
         "schema": schema_json,
@@ -1438,9 +1438,7 @@ def append_manifest_table(
         # (its owner retracts it momentarily); OUR append is durably
         # committed — re-raising would make retry-driven callers append
         # the same batch twice. The next writer/GC heals.
-        import logging
-
-        logging.getLogger(__name__).warning(
+        _log.warning(
             "post-append heal of %s deferred: transient orphan replace",
             table_name,
         )
@@ -1660,9 +1658,7 @@ def compact_manifest_table(
     try:
         heal_manifest_table(spark, warehouse, table_name)
     except ConcurrentWriteError:
-        import logging
-
-        logging.getLogger(__name__).warning(
+        _log.warning(
             "post-compact heal of %s deferred: transient orphan replace",
             table_name,
         )

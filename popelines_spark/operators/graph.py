@@ -47,15 +47,19 @@ def pagerank(
     damping: float = 0.85,
     broadcast_edges: bool = False,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over distinct ``edges`` (src, dst), ranks
-    for every row of ``nodes`` (node_col). Returns (node_col, pr DECIMAL).
+    """Fixed-iteration PageRank over distinct ``edges`` (src, dst). Returns
+    one (node_col, pr DECIMAL) row per DISTINCT node of ``nodes``: for
+    ``n_iter`` >= 1 the per-iteration ``groupBy`` collapses duplicate
+    ``nodes`` rows. Pass distinct nodes all the same — n (and with it the
+    1/n start and the (1-d)/n base) counts rows, and a duplicated source
+    contributes once per copy in the first iteration.
 
     Dangling nodes (no out-edges) contribute nothing — their mass leaks,
     so ranks sum to < 1 when danglers exist (documented classic variant).
     Use :func:`pagerank_redistributed` for the mass-conserving variant
     (one broadcast scalar per iteration).
 
-    r13 examined (tools/exp_pagerank.py): replacing the per-iteration
+    r13 examined (tools/exp_pagerank.py @ b9babdb): replacing the per-iteration
     init⋈inflow broadcast join with a union + keyed RE-aggregate (a
     SECOND exchange after the inflow aggregate) measured SLOWER — 4.28
     vs 3.54 s interleaved minima at sf0.1. r14 ships the shape that

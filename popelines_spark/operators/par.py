@@ -46,16 +46,19 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     return df if n >= target else df.repartition(target)
 
 
-def rebalance_output(df: DataFrame, target_bytes: int | None = None) -> DataFrame:
+#: The byte size ``rebalance_output`` aims each written file at.
+TARGET_FILE_BYTES = 128 << 20
+
+
+def rebalance_output(df: DataFrame) -> DataFrame:
     """Size a table write's partitions by BYTES, not by the input's
     partition count (guide §6 "Aim for output files in the 128 MB - 1 GB
     range"): merge the write-side partitions down to
-    ``ceil(estimated_bytes / target_bytes)`` so a small append lands as
-    ONE right-sized file instead of one tiny file per input partition.
-    Scale-adaptive by construction — the target is a byte size
-    (``POPELINES_TARGET_FILE_BYTES``, default 128 MB of estimated
-    in-memory/source bytes; parquet encoding compresses below that),
-    never a local core count.
+    ``ceil(estimated_bytes / TARGET_FILE_BYTES)`` so a small append lands
+    as ONE right-sized file instead of one tiny file per input partition.
+    Scale-adaptive by construction — the target is a byte size (128 MB
+    of estimated in-memory/source bytes; parquet encoding compresses
+    below that), never a local core count.
 
     Why it matters for the manifest layout specifically: every commit's
     manifest carries the FULL live file list, so a 32-partition 100k-row
@@ -72,22 +75,12 @@ def rebalance_output(df: DataFrame, target_bytes: int | None = None) -> DataFram
     the partition count is derived from the optimizer's own size
     estimate instead — deterministic, no conf mutation, and MERGE-ONLY
     (capped at the incoming partition count): an overestimated plan
-    degrades toward the legacy layout, never toward more/smaller files.
-    The exchange it inserts is a keyless repartition, deterministic
-    under task retry (SPARK-23207 sort-before-repartition), costing one
-    O(batch) local sort + shuffle of exactly the bytes being written.
-
-    ``POPELINES_WRITE_REBALANCE=0`` restores the legacy
-    carry-input-partitioning behavior (escape hatch for callers that
-    already sized the batch upstream)."""
-    import os
-
-    if os.environ.get("POPELINES_WRITE_REBALANCE", "1") == "0":
-        return df
-    if target_bytes is None:
-        target_bytes = int(
-            os.environ.get("POPELINES_TARGET_FILE_BYTES", str(128 << 20))
-        )
+    degrades toward the input's own partitioning, never toward
+    more/smaller files. The exchange it inserts is a keyless
+    repartition, deterministic under task retry (SPARK-23207
+    sort-before-repartition), costing one O(batch) local sort + shuffle
+    of exactly the bytes being written. Callers that size the batch
+    upstream pass ``n_files`` to the table write instead."""
     try:
         est = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -100,7 +93,7 @@ def rebalance_output(df: DataFrame, target_bytes: int | None = None) -> DataFram
         # unknown/absurd estimate (e.g. unstatted join fanout): the cap
         # would pin n to n_in anyway; skip the exchange entirely
         return df
-    n = min(max(n_in, 1), max(1, -(-est // target_bytes)))
+    n = min(max(n_in, 1), max(1, -(-est // TARGET_FILE_BYTES)))
     return df if n >= n_in else df.repartition(n)
 
 

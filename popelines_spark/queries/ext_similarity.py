@@ -280,10 +280,11 @@ def _ensure_scratch(spark, sf_dir, kind, parts, build, load):
     import os
     import shutil
 
-    root = os.path.join(
-        "/tmp/popelines_spark_scratch",
+    from popelines_spark.session import scratch_dir
+
+    root = scratch_dir(
         f"{kind}_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{_data_fingerprint(sf_dir)}",
+        f"_{_data_fingerprint(sf_dir)}"
     )
 
     def _complete(path):

@@ -10,12 +10,10 @@ can differ in the last ulp; sqrt/power-with-small-int-exponent are exact.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import functions as F
 
 from popelines_spark.registry import query
+from popelines_spark.session import scratch_dir
 from popelines_spark.queries._util import T
 
 
@@ -146,8 +144,7 @@ def b_sink_partitioned(spark, sf_dir):
     """Hive-style partitioned write + pruned read: the at-rest layout for
     date-chunked extraction (popelines/main.py:208-223) at 100 TB — a
     year's query touches one directory, not the table."""
-    path = "/tmp/popelines_spark_scratch/part_orders"
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("part_orders", fresh=True)
     o = T(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",

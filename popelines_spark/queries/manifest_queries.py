@@ -16,21 +16,11 @@ which is the whole 100 TB story (rewrite O(hit), not O(table)).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import functions as F
 
 from popelines_spark.registry import query
+from popelines_spark.session import scratch_dir
 from popelines_spark.queries._util import T
-
-_SCRATCH = "/tmp/popelines_spark_scratch"
-
-
-def _fresh(name: str) -> str:
-    path = os.path.join(_SCRATCH, f"{name}_{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
-    return path
 
 
 def _land_events(spark, sf_dir, wh, chunks=4):
@@ -71,7 +61,7 @@ def b_manifest_sql(spark, sf_dir):
     registration reads the committed tip exactly."""
     from popelines_spark.pipeline import Popeline
 
-    wh = _fresh("manifest_sql")
+    wh = scratch_dir("manifest_sql", fresh=True)
     _land_events(spark, sf_dir, wh)
     p = Popeline(warehouse=wh, spark=spark)
     p.register_table("ev", manifest=True)
@@ -106,7 +96,7 @@ def b_manifest_delete(spark, sf_dir):
     from popelines_spark.manifest import read_manifest_table
     from popelines_spark.manifest_dml import delete_manifest_rows
 
-    wh = _fresh("manifest_del")
+    wh = scratch_dir("manifest_del", fresh=True)
     _land_events(spark, sf_dir, wh)
     delete_manifest_rows(
         spark, wh, "ev",
@@ -145,7 +135,7 @@ def b_manifest_update(spark, sf_dir):
     from popelines_spark.manifest import read_manifest_table
     from popelines_spark.manifest_dml import update_manifest_rows
 
-    wh = _fresh("manifest_upd")
+    wh = scratch_dir("manifest_upd", fresh=True)
     _land_events(spark, sf_dir, wh)
     update_manifest_rows(
         spark, wh, "ev",
@@ -186,7 +176,7 @@ def s_manifest_changefeed(spark, sf_dir):
     from popelines_spark.streaming.changefeed import read_changefeed
     from popelines_spark.streaming.runner import run_to_completion
 
-    wh = _fresh("manifest_cf")
+    wh = scratch_dir("manifest_cf", fresh=True)
     hi, step = _land_events(spark, sf_dir, wh)
     feed = read_changefeed(spark, wh, "ev")
     agg = feed.groupBy("event_type").agg(
@@ -233,7 +223,7 @@ def b_manifest_upsert(spark, sf_dir):
     from popelines_spark.manifest import read_manifest_table
     from popelines_spark.manifest_dml import upsert_manifest_table
 
-    wh = _fresh("manifest_ups")
+    wh = scratch_dir("manifest_ups", fresh=True)
     _land_events(spark, sf_dir, wh)
     hits = (
         T(spark, sf_dir, "events")

@@ -24,24 +24,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
 from popelines_spark.registry import query
+from popelines_spark.session import scratch_dir
 from popelines_spark.queries._util import T
-
-_SCRATCH = "/tmp/popelines_spark_scratch"
-
-
-def _fresh(name: str) -> str:
-    """PID-scoped scratch dir: two engines running the same registered
-    query concurrently (driver gate + parity + plan tests) must not
-    rmtree each other's warehouse mid-read — the same guard
-    manifest_queries/rel_scan_sink already carry (review r12)."""
-    path = os.path.join(_SCRATCH, f"{name}_{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
-    return path
 
 
 @query(
@@ -59,7 +47,7 @@ def a_load_evolve(spark, sf_dir):
     c_acctbal; the v2 append adds the column; v1 rows read back NULL."""
     from popelines_spark.pipeline import Popeline
 
-    wh = _fresh("a_load_evolve_wh")
+    wh = scratch_dir("a_load_evolve_wh", fresh=True)
     p = Popeline(warehouse=wh, spark=spark)
     c = T(spark, sf_dir, "customer")
     v1 = c.filter(F.col("c_nationkey") < 10).select("c_custkey", "c_name")
@@ -101,7 +89,7 @@ def a_load_layouts(spark, sf_dir):
     from popelines_spark.manifest import append_manifest_table
     from popelines_spark.pipeline import Popeline
 
-    wh = _fresh("a_load_layouts_wh")
+    wh = scratch_dir("a_load_layouts_wh", fresh=True)
     p = Popeline(warehouse=wh, spark=spark)
     c = T(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey"
@@ -175,7 +163,7 @@ def a_dml_layouts(spark, sf_dir):
     from popelines_spark.manifest import append_manifest_table
     from popelines_spark.pipeline import Popeline
 
-    wh = _fresh("a_dml_layouts_wh")
+    wh = scratch_dir("a_dml_layouts_wh", fresh=True)
     p = Popeline(warehouse=wh, spark=spark)
     c = T(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey"
@@ -250,7 +238,7 @@ def a_fix_values(spark, sf_dir):
     the batch ships to Spark."""
     from popelines_spark.pipeline import Popeline
 
-    p = Popeline(warehouse=os.path.join(_SCRATCH, "unused_wh"), spark=spark)
+    p = Popeline(warehouse=scratch_dir("unused_wh"), spark=spark)
     batch = [
         {"a": 1, "b": "x", "nested": {"c": 10}},
         {"a": 2, "b": "y", "nested": {"c": 20}},
@@ -286,7 +274,7 @@ def a_copy_replace_keys(spark, sf_dir):
     from popelines_spark.pipeline import Popeline
     from popelines_spark.schemas import sanitize_identifier
 
-    wh = _fresh("a_copy_replace_wh")
+    wh = scratch_dir("a_copy_replace_wh", fresh=True)
     p = Popeline(warehouse=wh, spark=spark)
     s = T(spark, sf_dir, "supplier")
     nested = s.select(
@@ -321,7 +309,7 @@ def a_source_rest(spark, sf_dir):
     keep the test hermetic; the code path is byte-identical for http(s)."""
     from popelines_spark.sources.rest import fetch_json_distributed
 
-    pages_dir = _fresh("rest_pages")
+    pages_dir = scratch_dir("rest_pages", fresh=True)
     os.makedirs(pages_dir)
     for i in range(6):
         with open(os.path.join(pages_dir, f"page{i}.json"), "w") as f:
@@ -364,7 +352,7 @@ def a_source_rest_fanout(spark, sf_dir):
     from popelines_spark.incremental import chunk_date_range
     from popelines_spark.sources.rest import fetch_windows_distributed
 
-    pages = _fresh("rest_windows")
+    pages = scratch_dir("rest_windows", fresh=True)
     os.makedirs(pages)
     chunks = list(
         chunk_date_range(
@@ -416,7 +404,7 @@ def a_source_rest_pyds(spark, sf_dir):
     stub-server tests."""
     from popelines_spark.sources.pyds import RestWindowsDataSource
 
-    pages = _fresh("rest_pyds")
+    pages = scratch_dir("rest_pyds", fresh=True)
     os.makedirs(pages)
     import datetime as dt
 
@@ -473,7 +461,7 @@ def a_source_rest_paged(spark, sf_dir):
     against a live stub server in tests/test_rest_fanout.py."""
     from popelines_spark.sources.rest import fetch_pages_distributed
 
-    pages = _fresh("rest_paged")
+    pages = scratch_dir("rest_paged", fresh=True)
     os.makedirs(pages)
     for seed in range(4):
         for cur in range(seed + 1):

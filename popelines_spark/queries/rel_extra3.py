@@ -5,18 +5,12 @@ enrichment join.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
 from popelines_spark.registry import query
+from popelines_spark.session import scratch_dir
 from popelines_spark.queries._util import T
-
-
-def _scratch(name: str) -> str:
-    path = f"/tmp/popelines_spark_scratch/{name}_{os.getpid()}"
-    shutil.rmtree(path, ignore_errors=True)
-    return path
 
 
 @query(
@@ -26,7 +20,7 @@ def _scratch(name: str) -> str:
 def b_scan_csv(spark, sf_dir):
     """CSV round-trip with explicit schema (no inference in prod —
     pyspark guide pitfall); header on, same values back."""
-    path = _scratch("scan_csv")
+    path = scratch_dir("scan_csv", fresh=True)
     T(spark, sf_dir, "nation").write.option("header", True).csv(path)
     return spark.read.schema(
         "n_nationkey int, n_name string, n_regionkey int"
@@ -40,7 +34,7 @@ def b_scan_csv(spark, sf_dir):
 def b_scan_orc(spark, sf_dir):
     """ORC round-trip: the second columnar at-rest format (same pushdown /
     pruning machinery as parquet)."""
-    path = _scratch("scan_orc")
+    path = scratch_dir("scan_orc", fresh=True)
     T(spark, sf_dir, "supplier").write.orc(path)
     return spark.read.orc(path)
 
@@ -191,7 +185,7 @@ def b_join_bucketed(spark, sf_dir):
     import os
 
     base = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    root = _scratch(f"bucketed_{base}")
+    root = scratch_dir(f"bucketed_{base}", fresh=True)
     specs = {
         f"bkt_lineitem_{base}_{os.getpid()}": T(
             spark, sf_dir, "lineitem"

@@ -16,23 +16,12 @@ identical code over object-store URIs.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import functions as F
 
 from popelines_spark.registry import query
+from popelines_spark.session import scratch_dir
 from popelines_spark.queries._util import T
 from popelines_spark import io as pio
-
-_SCRATCH = "/tmp/popelines_spark_scratch"
-
-
-def _scratch(name: str) -> str:
-    # PID-qualified: concurrent harness processes must not share sink dirs.
-    path = os.path.join(_SCRATCH, f"{name}_{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
-    return path
 
 
 _DOCS_SCHEMA = (
@@ -53,7 +42,7 @@ def b_scan_parquet(spark, sf_dir):
 def b_scan_ndjson(spark, sf_dir):
     """NDJSON scan with explicit schema (NEWLINE_DELIMITED_JSON load path):
     documents → NDJSON → read back with declared schema."""
-    path = _scratch("scan_ndjson")
+    path = scratch_dir("scan_ndjson", fresh=True)
     pio.write_ndjson(T(spark, sf_dir, "documents"), path)
     return pio.read_ndjson(spark, path, schema=_DOCS_SCHEMA)
 
@@ -66,7 +55,7 @@ def b_scan_infer(spark, sf_dir):
     """NDJSON scan with inferred schema (generate-schema equivalent,
     popelines/main.py:62-75): ints infer as BIGINT, strings as STRING —
     matching the source types exactly for this table."""
-    path = _scratch("scan_infer")
+    path = scratch_dir("scan_infer", fresh=True)
     pio.write_ndjson(T(spark, sf_dir, "documents"), path)
     inferred = pio.infer_ndjson_schema(spark, path)
     return pio.read_ndjson(spark, path, schema=inferred).select(
@@ -81,7 +70,7 @@ def b_scan_infer(spark, sf_dir):
 def b_sink_ndjson(spark, sf_dir):
     """NDJSON sink round-trip (popelines/main.py:176-178). Doubles survive
     exactly: Spark's JSON writer emits shortest round-trip representation."""
-    path = _scratch("sink_ndjson")
+    path = scratch_dir("sink_ndjson", fresh=True)
     df = T(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -98,7 +87,7 @@ def b_sink_ndjson(spark, sf_dir):
 def b_sink_append(spark, sf_dir):
     """WRITE_APPEND disposition (popelines/main.py:137-139): overwrite once,
     append once, read back → exactly two copies."""
-    wh = _scratch("sink_append_wh")
+    wh = scratch_dir("sink_append_wh", fresh=True)
     df = T(spark, sf_dir, "documents")
     pio.write_table(df, wh, "docs", append=False)
     pio.write_table(df, wh, "docs", append=True)
@@ -109,7 +98,7 @@ def b_sink_append(spark, sf_dir):
 def b_sink_overwrite(spark, sf_dir):
     """WRITE_TRUNCATE disposition (popelines/main.py:135-136): two
     overwrites → exactly one copy."""
-    wh = _scratch("sink_overwrite_wh")
+    wh = scratch_dir("sink_overwrite_wh", fresh=True)
     df = T(spark, sf_dir, "documents")
     pio.write_table(df, wh, "docs", append=False)
     pio.write_table(df, wh, "docs", append=False)
@@ -128,7 +117,7 @@ def b_ctas(spark, sf_dir):
     """CREATE TABLE AS SELECT (popelines/main.py:299 emits CREATE OR REPLACE
     TABLE … AS SELECT). Spark SQL CTAS into an explicit parquet location;
     result read back through the catalog."""
-    loc = _scratch("ctas_orders_summary")
+    loc = scratch_dir("ctas_orders_summary", fresh=True)
     T(spark, sf_dir, "orders").createOrReplaceTempView("pls_orders_ctas")
     spark.sql("DROP TABLE IF EXISTS pls_ctas_summary")
     spark.sql(
@@ -177,15 +166,12 @@ def b_sink_manifest(spark, sf_dir):
     the committed manifest and aggregated — equal to the plain batch
     rollup the oracle runs iff no row was lost, duplicated, or torn.
     popelines_spark/manifest.py carries the protocol."""
-    import shutil as _shutil
-
     from popelines_spark.manifest import (
         append_manifest_table,
         read_manifest_table,
     )
 
-    scratch = f"/tmp/popelines_spark_scratch/manifest_sink_{os.getpid()}"
-    _shutil.rmtree(scratch, ignore_errors=True)
+    scratch = scratch_dir("manifest_sink", fresh=True)
     ev = T(spark, sf_dir, "events").select("event_id", "event_type")
     append_manifest_table(
         spark, scratch, "ev", ev.filter("event_id % 2 = 0"), batch_id="even"

@@ -229,7 +229,7 @@ def s_join_interval(spark, sf_dir):
     )
     # r13: stream-stream joins keep TWO state stores per shuffle
     # partition, so the drain uses the join-sized partition count
-    # (runner.STREAM_JOIN_SHUFFLE_PARTITIONS — measured, env-tunable,
+    # (runner.STREAM_JOIN_SHUFFLE_PARTITIONS — measured,
     # results partitioning-invariant).
     from popelines_spark.streaming.runner import STREAM_JOIN_SHUFFLE_PARTITIONS
 

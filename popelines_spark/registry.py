@@ -41,77 +41,65 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# Round-10 rotation: the driver scores a bounded 50-entry prefix of the
-# registry per round.  This round's window = the 30 entries that have
-# never been driver-scored (28 staged in round 8 + round-9's
-# ``b_join_bloom`` + round-10's ``b_join_star_planned``; the first 29
-# verified green by the round-9 judge's tools/parity.py runs at sf0.01
-# and sf0.001, the last by this round's), plus the 20 stalest
-# driver-green entries (round-2/3 cohort, computed from the latest green
-# round per id across CORRECTNESS_r01..r09) — 30+20 = 50.  After
-# CORRECTNESS_r10 every registered query except the post-rotation tail
-# is driver-proven.
-#
-# ROTATION IS MECHANIZED: `python tools/rotate_window.py` prints the
-# canonical tuple for the current scoring history, and
-# tests/test_driver_window.py FAILS at each round start until it is
-# pasted here (the round-9 forgot-to-rotate failure mode, made
-# impossible to miss).  (tools/parity.py still covers the full registry
-# every round at sf{0.001,0.01,0.1}.)
+# The driver scores a bounded 50-entry prefix of the registry per round,
+# so this window goes first. `python tools/rotate_window.py` prints the
+# canonical tuple for the current scoring history (never-scored ids,
+# then the stalest driver-green ones); tests/test_driver_window.py
+# flags a stale window. tools/parity.py covers the full registry.
 _DRIVER_WINDOW_FIRST: tuple[str, ...] = (
-    # -- round-13 window: the 45-entry round-5 stalest cohort plus the
-    # 5 stalest round-6 entries, emitted verbatim by
-    # tools/rotate_window.py (no never-scored ids this round).
-    "b_agg_collect",
-    "b_agg_count_distinct",
-    "b_agg_cube",
-    "b_agg_distinct_rows",
-    "b_agg_group",
-    "b_agg_grouping_sets",
-    "b_agg_having",
-    "b_agg_rollup",
-    "b_agg_scalar_max",
-    "b_ctas",
-    "b_filter_range_dates",
-    "b_fn_date",
-    "b_fn_date_seq",
-    "b_join_anti",
-    "b_join_asof",
-    "b_join_broadcast",
-    "b_join_cross",
-    "b_join_full",
-    "b_join_inner",
-    "b_join_left",
-    "b_join_right",
-    "b_join_semi",
-    "b_join_theta",
-    "b_project_drop",
-    "b_project_nested",
-    "b_project_rename_nested",
-    "b_sketch_cms_merge",
-    "b_unnest",
-    "b_unnest_inner",
-    "c_attribution",
-    "c_brand_affinity",
-    "c_containment",
-    "c_dataset_card",
-    "c_dp_counts",
-    "c_ewma_daily",
-    "c_moving_monthly",
-    "c_nation_share",
-    "c_pagerank_nations",
-    "c_repetition_stats",
-    "c_sample_weighted",
-    "c_scd2_track",
-    "c_skew_sessionize",
-    "c_yoy_brand",
-    "flagship_star_revenue",
-    "s_sliding",
-    "b_join_range",
-    "b_sketch_hist_quantile",
-    "b_snapshot_diff",
-    "c_ab_srm",
-    "c_activity_heatmap",
+    # -- window after CORRECTNESS_r14: the one entry no driver round has
+    # scored yet, then the 49 stalest driver-green ones (last scored in
+    # round 6 or 7), emitted verbatim by tools/rotate_window.py.
+    "a_dml_layouts",
+    "c_also_bought",
+    "c_autocorr",
+    "c_benford",
+    "c_bigram_novelty",
+    "c_bigram_xent",
+    "c_cart_abandonment",
+    "c_cohort_ltv",
+    "c_dedup_chunk",
+    "c_dup_cluster_sizes",
+    "c_feature_scale",
+    "c_first_touch",
+    "c_gap_fill",
+    "c_gini_revenue",
+    "c_graph_bfs",
+    "c_hhi_supplier",
+    "c_hist_equiwidth",
+    "c_incremental_agg",
+    "c_interpurchase_time",
+    "c_key_skew_profile",
+    "c_mad_outliers",
+    "c_mode_per_group",
+    "c_multimodal_frames",
+    "c_new_vs_repeat",
+    "c_pagerank_redistribute",
+    "c_pareto_8020",
+    "c_pit_join",
+    "c_qoq_growth",
+    "c_returns_rate",
+    "c_rfm_segments",
+    "c_ri_check",
+    "c_rolling_dau",
+    "c_seasonality_dow",
+    "c_seq_pattern",
+    "c_session_funnel",
+    "c_shipping_delay",
+    "c_simpson_diversity",
+    "c_skyline",
+    "c_streaks",
+    "c_triangle_count",
+    "c_user_lifecycle",
+    "c_vocab_coverage",
+    "c_vocab_growth",
+    "s_cdc_latest",
+    "s_rate_alert",
+    "s_topk_windowed",
+    "b_agg_approx_distinct",
+    "b_filter",
+    "b_limit",
+    "b_project",
 )
 
 

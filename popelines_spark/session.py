@@ -16,6 +16,7 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 
@@ -67,6 +68,34 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def scratch_dir(name: str, fresh: bool = False) -> str:
+    """``name`` under the engine's scratch root: ``POPELINES_SCRATCH_DIR``,
+    default ``/tmp/popelines_spark_scratch``. Every transient directory
+    the engine itself lays out lives there (replay stages, stream source
+    links, ANN index caches, registered queries' round-trip tables).
+
+    ``fresh=True`` scopes the directory to this process and empties it:
+    two engines running the same registered query at once (driver gate +
+    parity + plan tests) must not rmtree each other's tables mid-read."""
+    root = os.environ.get("POPELINES_SCRATCH_DIR", "/tmp/popelines_spark_scratch")
+    if not fresh:
+        return os.path.join(root, name)
+    path = os.path.join(root, f"{name}_{os.getpid()}")
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
+def _default_driver_mem() -> str:
+    """A quarter of the host's physical memory, capped at 24g: the heap
+    must leave room for the Python workers and other processes on a
+    small host, and 24g covers the largest local run."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "24g"
+    return f"{max(512, min(24 << 10, phys // 4 >> 20))}m"
+
+
 def get_spark(
     app_name: str = "popelines_spark",
     cpus: int | str | None = None,
@@ -75,17 +104,19 @@ def get_spark(
     """Build the engine's SparkSession (tests / bench / standalone use).
 
     The driver supplies its own session to ``__spark_entry__``; this factory
-    is for everything else.
+    is for everything else. ``cpus`` defaults to ``SPARK_GRAFT_CPUS``, else
+    the host's CPU count; ``shuffle_partitions`` to ``cpus``; the driver
+    heap to ``POPELINES_DRIVER_MEM``, else a quarter of physical memory
+    (at most 24g).
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("POPELINES_SHUFFLE_PARTITIONS", str(cpus))
-    )
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
+    shuffle_partitions = shuffle_partitions or int(cpus)
+    driver_mem = os.environ.get("POPELINES_DRIVER_MEM") or _default_driver_mem()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("POPELINES_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/popelines_spark_warehouse")
     )

@@ -70,6 +70,22 @@ def _read_manifest(vroot: str, version: int) -> dict:
     return doc
 
 
+_NULLABLE_KEYS = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _as_nullable(schema_json):
+    """A schema's JSON form with every nullability flag set, nested
+    structs, arrays and maps included."""
+    if isinstance(schema_json, list):
+        return [_as_nullable(v) for v in schema_json]
+    if not isinstance(schema_json, dict):
+        return schema_json
+    return {
+        k: True if k in _NULLABLE_KEYS else _as_nullable(v)
+        for k, v in schema_json.items()
+    }
+
+
 def _local(p: str) -> str:
     return p[len("file:"):] if p.startswith("file:") else p
 
@@ -195,29 +211,8 @@ class ManifestChangefeedReader(DataSourceStreamReader):
         # boundary (measured: the dominant cost of a changefeed drain,
         # OPTIMIZATION_r13.md batch 5). The batch path hands the scan's
         # own Arrow buffers straight through; rows never become Python
-        # objects. POPELINES_CHANGEFEED_ARROW=0 (or any conversion
-        # failure — logged to the worker's stderr) falls back to the
-        # legacy row path, which remains the semantic definition.
-        if os.environ.get("POPELINES_CHANGEFEED_ARROW", "1") != "0":
-            try:
-                yield from self._arrow_batches(tbl, names, partition)
-                return
-            except Exception as exc:  # pragma: no cover - defensive
-                import sys
-
-                print(
-                    "manifest_changefeed: arrow fast path failed "
-                    f"({exc!r}); falling back to row emission",
-                    file=sys.stderr,
-                )
-        cols = []
-        for c in partition.columns:
-            if c in names:
-                cols.append(tbl.column(c).to_pylist())
-            else:  # pre-evolution file: later columns surface as NULL
-                cols.append([None] * tbl.num_rows)
-        ver = [partition.version] * tbl.num_rows
-        yield from zip(*cols, ver)
+        # objects. A conversion error raises.
+        yield from self._arrow_batches(tbl, names, partition)
 
     def _arrow_batches(self, tbl, names: set, partition: FilePartition):
         """The projected parquet table as RecordBatches matching the
@@ -275,7 +270,10 @@ class ManifestChangefeedDataSource(DataSource):
                 f"manifest_changefeed: no committed versions under {vroot}"
             )
         man = _read_manifest(vroot, versions[-1])
-        schema = StructType.fromJson(json.loads(man["schema"]))
+        # every data column nullable, as Spark's own file sources read
+        # them: files written before an add-only evolution hold NULL for
+        # the new column, whatever nullability the evolving batch had
+        schema = StructType.fromJson(_as_nullable(json.loads(man["schema"])))
         return schema.add(_META_COL, T.LongType(), False)
 
     def streamReader(self, schema):

@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from popelines_spark.session import scratch_dir
+
 _COUNTER = itertools.count()
 
 
@@ -30,9 +32,8 @@ def events_stream(spark: SparkSession, sf_dir: str, path: str | None = None) -> 
     if os.path.isfile(src):
         # The file source requires a directory; expose the single parquet
         # file through a scratch dir symlink (testdata stays untouched).
-        link_dir = os.path.join(
-            "/tmp/popelines_spark_scratch/stream_src",
-            src.strip("/").replace("/", "_"),
+        link_dir = scratch_dir(
+            os.path.join("stream_src", src.strip("/").replace("/", "_"))
         )
         os.makedirs(link_dir, exist_ok=True)
         link = os.path.join(link_dir, "events.parquet")
@@ -50,24 +51,16 @@ def events_stream(spark: SparkSession, sf_dir: str, path: str | None = None) -> 
     return tables._ntz_to_ltz(stream)
 
 
-#: Base dir for the replay harness's TRANSIENT stage files (the
-#: multi-micro-batch parquet stages write_replay_stages lays out);
-#: rewritten from the parquet inputs on every invocation, never reused
-#: across runs. r13 examined (tools/exp_replay_scratch.py): pointing
-#: this at /dev/shm like the checkpoints measured NEUTRAL (±0.1 s,
-#: inside noise, all three replay queries) — unlike the per-micro-batch
-#: checkpoint commits, the stage files are a few large sequential
-#: writes the page cache already absorbs — so the default stays on
-#: disk; the env knob exists for hosts where it matters.
-REPLAY_SCRATCH_BASE = os.environ.get(
-    "POPELINES_REPLAY_SCRATCH_DIR", "/tmp/popelines_spark_scratch"
-)
-
-
 def replay_scratch(name: str) -> str:
-    """Scratch dir for a named replay's stage files (see
-    REPLAY_SCRATCH_BASE)."""
-    return os.path.join(REPLAY_SCRATCH_BASE, name)
+    """Dir for a named replay's TRANSIENT stage files (the
+    multi-micro-batch parquet stages write_replay_stages lays out),
+    under the engine's scratch root; rewritten from the parquet inputs
+    on every invocation, never reused across runs. r13 measured a tmpfs
+    location neutral here (tools/exp_replay_scratch.py @ b9babdb: ±0.1 s,
+    inside noise, all three replay queries) — unlike the per-micro-batch
+    checkpoint commits, the stage files are a few large sequential
+    writes the page cache already absorbs."""
+    return scratch_dir(name)
 
 
 def write_replay_stages(spark, scratch: str, stages) -> None:
@@ -122,27 +115,20 @@ LAST_STATE_METRICS: dict = {}
 #: cores busy across concurrent stages while quartering the per-batch
 #: task constant. PRODUCTION deployments size this to state volume
 #: (state is hash-partitioned by key; the count is fixed at first
-#: checkpoint), which is why it's an env-tunable harness setting and
-#: not a hardcode in the operators.
-STREAM_SHUFFLE_PARTITIONS = int(
-    os.environ.get("POPELINES_STREAM_SHUFFLE_PARTITIONS", "8")
-)
+#: checkpoint) through run_to_completion(shuffle_partitions=).
+STREAM_SHUFFLE_PARTITIONS = 8
 
 #: Shuffle-partition count for STREAM-STREAM JOIN drains specifically.
 #: A stream-stream join keeps TWO state stores per shuffle partition
 #: (left and right side), so its per-micro-batch checkpoint constant is
 #: 2 x partitions x (delta + commit files) — double every other
-#: stateful operator's. r13 measured (tools/exp_stream_parts2.py,
-#: interleaved calm-gated minima, every round won): s_join_interval
-#: 2.119 -> 1.720 s and s_join_interval_left 3.801 -> 3.317 s at 2
-#: partitions vs the uniform 8, while non-join stateful operators were
-#: neutral (s_cdc_latest, s_topk_windowed) or SLOWER (s_session — the
-#: sessionization compute wants the width). PRODUCTION deployments size
-#: this to state volume exactly like STREAM_SHUFFLE_PARTITIONS (the
-#: count is fixed at first checkpoint), hence env-tunable.
-STREAM_JOIN_SHUFFLE_PARTITIONS = int(
-    os.environ.get("POPELINES_STREAM_JOIN_SHUFFLE_PARTITIONS", "2")
-)
+#: stateful operator's. r13 measured (tools/exp_stream_parts2.py @
+#: b9babdb, interleaved calm-gated minima, every round won):
+#: s_join_interval 2.119 -> 1.720 s and s_join_interval_left 3.801 ->
+#: 3.317 s at 2 partitions vs the uniform 8, while non-join stateful
+#: operators were neutral (s_cdc_latest, s_topk_windowed) or SLOWER
+#: (s_session — the sessionization compute wants the width).
+STREAM_JOIN_SHUFFLE_PARTITIONS = 2
 
 #: State-store provider for the replay harness. Default "hdfs" (Spark's
 #: in-JVM-heap HDFSBackedStateStoreProvider) — at replay state sizes

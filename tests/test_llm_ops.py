@@ -118,8 +118,8 @@ def test_multi_table_lsh_recall_dominates_single_table(spark):
 
 
 def test_keyed_spread_elides_aggregate_exchange(spark):
-    """r13 batch 6 (tools/exp_spread_key.py): the compute-fan-out spread
-    in minhash_signatures/_shingle_hash_rows hash-partitions on the doc
+    """r13 batch 6 (tools/exp_spread_key.py @ b9babdb): the compute-fan-out
+    spread in minhash_signatures/_shingle_hash_rows hash-partitions on the doc
     id, so the keyed groupBy / window / distinct downstream REUSE that
     partitioning — exactly ONE Exchange (the spread itself, shaped
     hashpartitioning(id)) in each subtree, not two."""
@@ -534,8 +534,8 @@ def test_ngram_match_count_bound_is_complete(spark):
     loses qualifying pairs, the failure mode that kept suffix filtering
     out of round 13. This harness gated the r14 match-count-bound
     experiment (built, proven complete, measured 0% pruning on the sf0.1
-    corpus, rejected — tools/exp_ngram_match_count.py) and stays as the
-    completeness gate for any future candidate-bound tightening."""
+    corpus, rejected — tools/exp_ngram_match_count.py @ b9babdb) and stays as
+    the completeness gate for any future candidate-bound tightening."""
     from popelines_spark.llm.text import shingles as _sh
 
     for seed in (7, 23):

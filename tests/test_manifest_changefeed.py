@@ -61,6 +61,52 @@ def test_changefeed_streams_appends_and_restarts_without_dups(
     assert len({r["id"] for r in rows2}) == 22  # every row exactly once
 
 
+def test_changefeed_arrow_batches_evolved_table(spark, scratch, tmp_path):
+    """The changefeed emits Arrow batches only, so they alone must carry
+    a TIMESTAMP column and an add-only evolved column: files written
+    before the evolution surface the new column as NULL, and the latest
+    feed row per key equals the table row."""
+    from popelines_spark.manifest import read_manifest_table
+
+    def batch(lo, n, promo):
+        df = spark.range(lo, lo + n).select(
+            F.col("id"),
+            F.timestamp_seconds(F.col("id") * 3600 + 1_600_000_000).alias("ts"),
+            (F.col("id") * 10).alias("amount"),
+        )
+        return df if promo is None else df.withColumn("promo", F.lit(promo))
+
+    append_manifest_table(spark, scratch, "cfe", batch(0, 10, None))
+    append_manifest_table(spark, scratch, "cfe", batch(10, 5, "p"))
+    update_manifest_rows(spark, scratch, "cfe", {"promo": "'UPD'"}, "id < 3")
+
+    out = str(tmp_path / "out")
+    q = (
+        read_changefeed(spark, scratch, "cfe")
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    feed = spark.read.parquet(out).collect()
+
+    assert {r["promo"] for r in feed if r["_change_version"] == 1} == {None}
+    latest = {}
+    for r in feed:
+        if r["id"] not in latest or r["_change_version"] > latest[r["id"]][0]:
+            latest[r["id"]] = (r["_change_version"], r)
+    cols = ["id", "ts", "amount", "promo"]
+    table = {
+        r["id"]: tuple(r[c] for c in cols)
+        for r in read_manifest_table(spark, scratch, "cfe").collect()
+    }
+    assert len(table) == 15
+    assert {k: tuple(r[c] for c in cols) for k, (_, r) in latest.items()} == table
+    assert table[0][3] == "UPD" and table[5][3] is None and table[12][3] == "p"
+
+
 def test_changefeed_skips_compaction(spark, scratch, tmp_path):
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
     append_manifest_table(spark, scratch, "cfc", _mk(spark, 0, 10, "a"))

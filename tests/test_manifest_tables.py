@@ -865,13 +865,13 @@ def test_heal_replays_orphaned_replace(spark, scratch):
     assert read_manifest_table(spark, scratch, "mrp").count() == 7
 
 
-def test_append_default_output_is_rebalance_sized(spark, scratch, monkeypatch):
+def test_append_default_output_is_rebalance_sized(spark, scratch):
     """r13 guide §6: the default (no n_files) append sizes its output by
     BYTES via a REBALANCE hint — a many-partition micro-batch lands as
     few advisory-sized files, not one tiny file per input partition
     (each commit's manifest carries the full file list, so the batch's
     file count is the metadata-growth slope). Explicit n_files still
-    wins; POPELINES_WRITE_REBALANCE=0 restores the legacy behavior."""
+    wins."""
     wide = spark.range(100_000).repartition(16).select(
         F.col("id"), F.lit("a").alias("tag")
     )
@@ -883,11 +883,26 @@ def test_append_default_output_is_rebalance_sized(spark, scratch, monkeypatch):
     append_manifest_table(spark, scratch, "mrb", wide, n_files=2,
                           batch_id="b2")
     assert len(glob.glob(f"{scratch}/mrb/data/v2/*.parquet")) == 2
+    assert read_manifest_table(spark, scratch, "mrb").count() == 200_000
 
-    monkeypatch.setenv("POPELINES_WRITE_REBALANCE", "0")
-    append_manifest_table(spark, scratch, "mrb", wide, batch_id="b3")
-    assert len(glob.glob(f"{scratch}/mrb/data/v3/*.parquet")) == 16
-    assert read_manifest_table(spark, scratch, "mrb").count() == 300_000
+
+def test_commit_trace_is_one_debug_record_per_commit(spark, scratch, caplog):
+    """The commit trace is a DEBUG record on the module's logger, one
+    per written version; the logging level turns it on."""
+    import logging
+
+    caplog.set_level(logging.DEBUG, logger="popelines_spark.manifest")
+    append_manifest_table(spark, scratch, "mtr", _mk(spark, 3, "a"), batch_id="b1")
+    append_manifest_table(spark, scratch, "mtr", _mk(spark, 2, "b"), batch_id="b2")
+    got = [
+        r.getMessage().rsplit(" thr=", 1)[0]
+        for r in caplog.records
+        if r.name == "popelines_spark.manifest" and r.levelno == logging.DEBUG
+    ]
+    assert got == [
+        "commit v=1 op=append parent=None nfiles=1 bid=b1",
+        "commit v=2 op=append parent=1 nfiles=2 bid=b2",
+    ]
 
 
 def test_append_rebalance_composes_with_stats_cols(spark, scratch):

@@ -165,6 +165,31 @@ def test_pagerank_dangling_mass_leaks(spark):
     assert sum(out.values()) < 1.0
 
 
+def test_pagerank_edge_to_outside_node_counts_in_out_degree(spark):
+    from popelines_spark.operators.graph import pagerank
+
+    # 0->1, 0->9, 1->0 with nodes {0, 1}: node 9 is outside the node set,
+    # so it gets no rank row, but 0's out-degree is still 2 — half of
+    # 0's rank leaks through the edge to 9 instead of all going to 1
+    edges = spark.createDataFrame([(0, 1), (0, 9), (1, 0)], "src int, dst int")
+    nodes = spark.createDataFrame([(0,), (1,)], "node int")
+    out = {r.node: float(r.pr) for r in pagerank(edges, nodes).collect()}
+    assert set(out) == {0, 1}
+    pr0 = pr1 = 0.5
+    for _ in range(10):
+        pr0, pr1 = 0.075 + 0.85 * pr1, 0.075 + 0.85 * pr0 / 2
+    assert abs(out[0] - pr0) < 1e-9 and abs(out[1] - pr1) < 1e-9
+
+
+def test_pagerank_ranks_each_distinct_node_once(spark):
+    from popelines_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame([(0, 1), (1, 0)], "src int, dst int")
+    nodes = spark.createDataFrame([(0,), (1,), (1,)], "node int")
+    got = sorted(r.node for r in pagerank(edges, nodes, n_iter=2).collect())
+    assert got == [0, 1]
+
+
 def test_attribution_channels_partition_purchases(spark):
     from popelines_spark.queries.ext_analytics2 import c_attribution
     from popelines_spark.tables import load

@@ -68,11 +68,11 @@ def test_invalid_state_provider_fails_before_conf_override(spark, monkeypatch):
 
 
 def test_interval_join_drains_at_join_sized_partitions(spark):
-    """r13 (tools/exp_stream_parts2.py): stream-stream joins keep TWO
-    state stores per shuffle partition, so the two interval-join queries
-    drain at STREAM_JOIN_SHUFFLE_PARTITIONS (default 2, env-tunable) —
-    measured faster every interleaved round while non-join stateful
-    drains stay at STREAM_SHUFFLE_PARTITIONS. The state operator's
+    """r13 (tools/exp_stream_parts2.py @ b9babdb): stream-stream joins
+    keep TWO state stores per shuffle partition, so the two interval-join
+    queries drain at STREAM_JOIN_SHUFFLE_PARTITIONS (2) — measured
+    faster every interleaved round while non-join stateful drains stay
+    at STREAM_SHUFFLE_PARTITIONS. The state operator's
     reported numShufflePartitions is the evidence the wiring holds."""
     import __spark_entry__ as entry
 

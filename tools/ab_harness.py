@@ -8,7 +8,8 @@ calibration probe bracketing each round, and reports per-variant minima
 (the standard estimator under asymmetric scheduling noise) plus the probe
 minimum so the host state during the experiment is part of the record.
 
-Usage: import from an experiment script; see tools/exp_*.py.
+Usage: import from an experiment script (git show b9babdb:tools/ holds
+the round-13/14 ones).
 """
 
 from __future__ import annotations
