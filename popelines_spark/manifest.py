@@ -28,11 +28,16 @@ Concurrency contract (linearized commits, Iceberg-style):
    higher number if needed, and retries). Committed history is
    therefore LINEAR BY CONSTRUCTION and number order equals commit
    order — the atomic-swap contract of Iceberg/Delta, on a bare
-   filesystem. Appends rebase cheaply (manifest JSON re-read; their
-   data files are parent-independent); replace/compact payloads are
-   snapshots of their parent, so a lost race retries the whole
-   operation against the new tip (:class:`ConcurrentWriteError` at the
-   DML surface after bounded retries);
+   filesystem;
+ - appends rebase on METADATA only (:func:`_append_rebase` re-reads
+   the tip's manifest JSON; their data files are parent-independent);
+ - DML (DELETE/UPDATE/MERGE) and compaction share ONE replace loop
+   (:func:`_replace_commit`): their payloads are snapshots of their
+   parent, so a lost race gives way and the whole operation retries
+   against the new tip (:class:`ConcurrentWriteError` after bounded
+   retries);
+ - only GC (:func:`gc_manifest_table`) deletes a committed version, so
+   a listed version can vanish under a reader only by collection;
  - every manifest records its ``parent`` version and ``op``
    (append/compact/replace); :func:`heal_manifest_table` remains as the
    REPAIR layer for crash debris and legacy divergent histories
@@ -100,8 +105,8 @@ class SegmentLossError(RuntimeError):
     """A committed manifest references a segment chunk that no longer
     exists. This is METADATA CORRUPTION (a vacuum-lease violation or
     external deletion), not a transient race — it must surface loudly.
-    It deliberately does NOT read as "version retracted": treating it
-    as retraction would let gc_manifest_table silently skip the
+    It deliberately does NOT read as "version vanished": treating it
+    that way would let gc_manifest_table silently skip the
     version's contribution to the retained set and delete data files a
     committed, retained version still references."""
 
@@ -217,7 +222,7 @@ def _expand_files(fs, vroot, doc: dict, jvm) -> dict:
                     raise SegmentLossError(
                         f"manifest v{doc.get('version')} under {vroot} "
                         f"references missing segment chunk {sha} — "
-                        "metadata corruption, not a retracted version"
+                        "metadata corruption, not a vanished version"
                     ) from exc
                 raise
             try:
@@ -316,15 +321,15 @@ def _read_manifest(fs, vroot, version, jvm) -> dict:
 
 def _read_manifest_or_none(fs, vroot, version, jvm) -> dict | None:
     """``_read_manifest`` that returns None when the version directory
-    vanished — the retract path of an orphaned replace-commit
-    (manifest_dml._replace_commit) deletes a version that a concurrent
-    reader may have just listed; every list-then-read site must treat
-    that as "re-resolve against a fresh listing", not an error."""
+    vanished — GC (:func:`gc_manifest_table`, the only path that deletes
+    a committed version) may drop a version that a concurrent reader
+    has just listed; every list-then-read site must treat that as
+    "re-resolve against a fresh listing", not an error."""
     try:
         return _read_manifest(fs, vroot, version, jvm)
     except SegmentLossError:
         # a COMMITTED manifest whose segment chunk is gone is metadata
-        # corruption, not a retracted version — mapping it to None would
+        # corruption, not a GC'd version — mapping it to None would
         # let GC treat the version as absent and delete its data files
         raise
     except Exception as exc:  # py4j wraps java.io.FileNotFoundException
@@ -349,10 +354,11 @@ def _orphan_replaces(fs, vroot, jvm, tip: int | None) -> list[int]:
     legacy/crash histories against.
 
     FAIL-OPEN on unknowable history: if the walk from ``tip`` hits a
-    DANGLING parent pointer (a retracted manifest some committed child
-    still references), the true lineage cannot be decided — returning a
-    false orphan there would brick a caller over a transient race, so
-    heal/GC report loudly instead."""
+    DANGLING parent pointer (a GC'd manifest, or one a legacy history
+    retracted, that some committed child still references), the true
+    lineage cannot be decided — returning a false orphan there would
+    brick a caller over a transient race, so heal/GC report loudly
+    instead."""
     versions = _committed_manifest_versions(fs, vroot, jvm)
     mans: dict[int, dict] = {}
     for v in versions:
@@ -372,8 +378,8 @@ def _orphan_replaces(fs, vroot, jvm, tip: int | None) -> list[int]:
         v = p
     # a replace heal already REPLAYED into this lineage is satisfied,
     # not orphaned — its marker id is carried forward by every commit
-    # (without this filter, every post-replay append would retract and
-    # rebase ten futile times against a permanently-off-chain manifest)
+    # (without this filter a replayed replace would classify as
+    # orphaned forever: its own manifest stays off-chain)
     tip_ids = set(mans[tip].get("batch_ids", []))
     return [
         v for v in versions
@@ -386,8 +392,9 @@ def _orphan_replaces(fs, vroot, jvm, tip: int | None) -> list[int]:
 def _resolve_tip(fs, vroot, jvm, label: str) -> tuple[int, dict]:
     """List committed versions and read the tip, re-resolving (≤10×)
     when the tip vanishes between the listing and the read — the
-    orphaned-replace retract race every list-then-read site must
-    tolerate. Raises FileNotFoundError when no version is committed."""
+    vanished-version race every list-then-read site must tolerate
+    (:func:`_read_manifest_or_none`). Raises FileNotFoundError when no
+    version is committed."""
     for _ in range(10):
         versions = _committed_manifest_versions(fs, vroot, jvm)
         if not versions:
@@ -696,10 +703,10 @@ def _commit_manifest(
     default) the flip happens under the table's commit lock and is
     REFUSED (:class:`StaleParentError`) unless ``parent`` is the current
     tip — every caller rebases and retries, so committed history is
-    linear by construction. ``enforce_linear=False`` exists only for
-    history REPAIR (the retract-restore paths, which reconstruct a
-    deleted manifest verbatim for a child that raced in) and for tests
-    that fabricate divergent legacy histories to exercise heal."""
+    linear by construction. ``enforce_linear=False`` is the unlocked
+    inner write the locked flip calls once its check passed, and the
+    hook tests use to fabricate divergent legacy histories that
+    exercise heal."""
     if enforce_linear:
         # segment materialization happens BEFORE the lock: chunks are
         # content-addressed and parent-independent, so writing them
@@ -848,6 +855,166 @@ def _commit_manifest(
     _mark_stats_stale(spark, vroot.removesuffix("/versions"))
 
 
+class _Conflict(Exception):
+    """A replace-type commit lost its race: retry against the new tip."""
+
+
+def _is_missing_file_error(exc: Exception) -> bool:
+    """A scan that lost the race to GC (its pinned parent's files were
+    reclaimed mid-build) surfaces as a missing-path error from the
+    parquet reader. That is a CONCURRENCY event, not a caller error —
+    the standard lakehouse contract (Iceberg/Delta concurrent writers
+    re-validate and retry after a vacuum) — so callers map it to a
+    rebase-and-retry instead of failing the DML."""
+    s = str(exc)
+    # match only the specific phrasings Spark's readers use for a
+    # vanished input path — the bare substring "does not exist" also
+    # appears in py4j "Method ... does not exist" signature errors and
+    # catalog "Table or view ... does not exist" errors, which are
+    # deterministic bugs that must SURFACE, not be retried as races
+    # (same rule as _read_manifest_or_none)
+    # FAILED_READ_FILE is an UMBRELLA class that also covers corrupt
+    # footers and parquet type mismatches — deterministic failures that
+    # retrying as races would bury under a bogus ConcurrentWriteError
+    # (review r12); match only its vanished-file subclass
+    return (
+        "PATH_NOT_FOUND" in s
+        or "FileNotFoundException" in s
+        or "FAILED_READ_FILE.FILE_NOT_EXIST" in s
+        or "Path does not exist" in s
+    )
+
+
+def _replace_commit(
+    spark: SparkSession,
+    warehouse: str,
+    table_name: str,
+    build,  # (tip_manifest, schema) -> (affected, rewritten_df, schema_out)
+    max_retries: int = 3,
+    op: str = "replace",
+    n_files: int | None = None,
+) -> int:
+    """The one OCC loop for commits whose payload is a SNAPSHOT of their
+    parent: row-level DML (``op="replace"``) and compaction
+    (``op="compact"``). ``build`` runs against the tip read after the
+    reservation and returns which files to drop, the rewrite of their
+    surviving rows, and the (possibly evolved) output schema. The
+    rewrite lands in ``data/v{N}`` — ``n_files`` files when given, else
+    rebalance-sized — and the manifest is the tip's files minus the
+    affected ones plus the rewrite, carrying every batch id forward.
+
+    Unlike an append, whose files are parent-independent, the payload
+    targeted one exact state, so a lost race gives way: a flip refused
+    by the linearized commit (:class:`StaleParentError`) or a parent
+    whose files GC reclaimed mid-build retries the WHOLE operation
+    against the new tip, and :class:`ConcurrentWriteError` is raised
+    after ``max_retries`` lost races. Returns the committed version."""
+    from pyspark.sql.types import StructType
+
+    root, vroot, droot = _paths(warehouse, table_name)
+    fs, _, jvm = _hadoop_fs(spark, root)
+    last: Exception | None = None
+    healed_once = False
+    for _ in range(max_retries):
+        version = _reserve_version(fs, vroot, jvm)
+        try:
+            parent, man = _resolve_tip(
+                fs, vroot, jvm, f"{table_name} ({root})"
+            )
+            schema = StructType.fromJson(json.loads(man["schema"]))
+            ddir = f"{droot}/v{version}"
+            try:
+                affected, rewritten, schema_out = build(man, schema)
+                # r13 (guide §6): the survivor rewrite otherwise
+                # inherits one partition per affected input file, so
+                # a CoW UPDATE touching N small files writes ~N small
+                # files again — rebalance heals the layout instead of
+                # perpetuating it (same sizing as the append path).
+                out = (
+                    rewritten.repartition(n_files)
+                    if n_files else rebalance_output(rewritten)
+                )
+                out.write.mode("overwrite").parquet(ddir)
+            except Exception as exc:
+                if not _is_missing_file_error(exc):
+                    raise
+                # the pinned parent's files were GC'd mid-build: rebase
+                # onto the current tip and rebuild against live files
+                raise _Conflict(
+                    f"parent {parent} files reclaimed by GC mid-build"
+                ) from exc
+            # debris: survivor rewrite on disk, commit never ran
+            _crash_point("after_rewrite_write")
+            affected_set = set(affected)
+            files = [f for f in man["files"] if f not in affected_set]
+            files += _list_parquet(fs, ddir, jvm)
+            file_stats = {
+                f: s
+                for f, s in man.get("file_stats", {}).items()
+                if f not in affected_set
+            }
+            # cheap early check before taking the commit lock: a racing
+            # commit since the rebase read means our rewrite targeted a
+            # stale tip (the lock would refuse it anyway — this just
+            # skips the lock round-trip for definitely-stale flips)
+            now = _committed_manifest_versions(fs, vroot, jvm)
+            if now and now[-1] != parent:
+                raise _Conflict(f"tip moved {parent} -> {now[-1]}")
+            try:
+                _commit_manifest(
+                    spark, fs, vroot, version, files,
+                    json.dumps(schema_out.jsonValue()), jvm,
+                    parent=parent, op=op,
+                    batch_ids=man.get("batch_ids", []),
+                    file_stats=file_stats,
+                )
+            except StaleParentError as exc:
+                # the linearized flip refused a stale parent: the
+                # rewrite targeted superseded state — retry the whole
+                # operation against the new tip. (This closed the
+                # near-simultaneous-walk race where two replaces flipped
+                # parented on the same manifest and neither's own
+                # post-commit walk saw the other.)
+                raise _Conflict(str(exc)) from exc
+            try:
+                heal_manifest_table(spark, warehouse, table_name)
+            except Exception:
+                # OUR commit is durably on the tip; NO best-effort heal
+                # failure (transient orphan ConcurrentWriteError,
+                # reservation churn) may convert this success into a
+                # caller-visible failure — an application-level retry of
+                # a non-idempotent UPDATE would double-apply (review
+                # r12). The next writer/GC heals.
+                _log.warning(
+                    "post-%s heal of %s deferred", op, table_name,
+                    exc_info=True,
+                )
+            return version
+        except _Conflict as exc:
+            _release_reservation(fs, vroot, version, jvm)
+            last = exc
+            # heal once, on the FIRST conflict only: under linearized
+            # commits a refused flip leaves nothing of OURS to repair —
+            # the heal is for crash debris or a legacy divergent
+            # history that may be blocking the table, and that either
+            # heals on the first pass or needs the loud post-retry
+            # failure. Healing on every conflict paid an O(all
+            # manifests) scan per lost race for a removed failure mode
+            # (review r11).
+            if not healed_once:
+                healed_once = True
+                try:
+                    heal_manifest_table(spark, warehouse, table_name)
+                except (ConcurrentWriteError, FileNotFoundError):
+                    pass
+        except Exception:
+            _release_reservation(fs, vroot, version, jvm)
+            raise
+    raise ConcurrentWriteError(
+        f"{op} on {table_name} lost {max_retries} optimistic races"
+    ) from last
+
+
 def _list_parquet(fs, path, jvm) -> list[str]:
     HPath = jvm.org.apache.hadoop.fs.Path
     return [
@@ -891,7 +1058,7 @@ def _find_batch_version(fs, vroot, versions, jvm, batch_id: str):
             return None
         tip = versions[-1]
         tipman = _read_manifest_or_none(fs, vroot, tip, jvm)
-        if tipman is None:  # tip retracted under us: re-list, re-resolve
+        if tipman is None:  # tip vanished under us: re-list, re-resolve
             versions = _committed_manifest_versions(fs, vroot, jvm)
             continue
         if "batch_ids" in tipman:
@@ -976,7 +1143,7 @@ def heal_manifest_table(
                 mans[v] = m
         versions = [v for v in versions if v in mans]
         if not versions:
-            continue  # everything listed got retracted: re-list
+            continue  # everything listed vanished (GC): re-list
         tip = versions[-1]
         chain = _lineage(mans, versions, tip)
         tipman = mans[tip]
@@ -1225,6 +1392,32 @@ def heal_manifest_table(
     return healed
 
 
+def _append_rebase(
+    fs, vroot, jvm, label: str, schema
+) -> tuple[int | None, list[str], dict, list[str], object]:
+    """An append's rebase state against the current tip: (parent, its
+    files, its file stats, its batch ids, ``schema`` merged add-only
+    onto its schema). Metadata only — the append's data files are
+    parent-independent, so a rebase never rewrites them. An empty table
+    rebases onto nothing: ``(None, [], {}, [], schema)``; a tip that
+    vanishes between the listing and the read is re-resolved
+    (:func:`_resolve_tip`)."""
+    from pyspark.sql.types import StructType
+
+    try:
+        parent, man = _resolve_tip(fs, vroot, jvm, label)
+    except FileNotFoundError:
+        return None, [], {}, [], schema
+    live = StructType.fromJson(json.loads(man["schema"]))
+    return (
+        parent,
+        man["files"],
+        man.get("file_stats", {}),
+        man.get("batch_ids", []),
+        merge_schemas(live, schema),
+    )
+
+
 def append_manifest_table(
     spark: SparkSession,
     warehouse: str,
@@ -1241,11 +1434,12 @@ def append_manifest_table(
     stay as written — the reader supplies the evolved schema, exactly the
     parquet-mergeSchema economics of write_table.
 
-    Concurrency: the parent manifest is (re-)read AFTER the version
-    reservation is won, so the common read-then-write lost update is
-    gone; the residual window (a lower reserved version committing after
-    our rebase read) is closed post-commit by :func:`heal_manifest_table`
-    — racing appends converge to a tip containing both batches.
+    Concurrency: the parent manifest is read AFTER the version
+    reservation is won, and the linearized flip refuses any parent that
+    is no longer the tip; the append then rebases on METADATA only
+    (:func:`_append_rebase` — its data files are parent-independent)
+    and retries the flip, so racing appends converge to a tip
+    containing both batches.
 
     ``batch_id`` makes the append IDEMPOTENT: if the table has ever
     committed this id, the call is a no-op returning that version (the
@@ -1268,12 +1462,7 @@ def append_manifest_table(
             return seen
     version = _reserve_version(fs, vroot, jvm)
     _crash_point("after_reserve")  # debris: a bare __reserved marker
-    prev_files: list[str] = []
-    prev_stats: dict = {}
-    prev_ids: list[str] = []
-    parent: int | None = None
-    target_schema = df.schema
-    HPath = jvm.org.apache.hadoop.fs.Path
+    label = f"{table_name} ({root})"
     try:
         # REBASE: everything about the parent is read after the
         # reservation (idempotency recheck included — its tip-churn
@@ -1286,31 +1475,11 @@ def append_manifest_table(
             if seen is not None:
                 _release_reservation(fs, vroot, version, jvm)
                 return seen
-        man = None
-        for _ in range(10):  # bounded, like every retract-resolve site
-            if not versions:
-                break
-            parent = versions[-1]
-            man = _read_manifest_or_none(fs, vroot, parent, jvm)
-            if man is not None:
-                break
-            # parent retracted between listing and read: re-resolve
-            versions = _committed_manifest_versions(fs, vroot, jvm)
-            parent = None
-        else:
-            raise ConcurrentWriteError(
-                f"tip of {table_name} kept vanishing during append rebase"
-            )
-        if man is not None:
-            prev_files = man["files"]
-            prev_stats = man.get("file_stats", {})
-            prev_ids = man.get("batch_ids", [])
-            from pyspark.sql.types import StructType
-
-            live = StructType.fromJson(json.loads(man["schema"]))
-            target_schema = merge_schemas(live, df.schema)
+        parent, prev_files, prev_stats, prev_ids, target_schema = (
+            _append_rebase(fs, vroot, jvm, label, df.schema)
+        )
+        if parent is not None:
             df = _align_to(df, target_schema)
-            target_schema = df.schema
         ddir = f"{droot}/v{version}"
         # the data dir is pinned to the ORIGINAL reserved number: a
         # burned-number rebase re-commits under a fresh version WITHOUT
@@ -1354,10 +1523,8 @@ def append_manifest_table(
         # LINEARIZED FLIP: the commit lock inside _commit_manifest
         # refuses any parent that is not the live tip, so committed
         # history is linear by construction — no stale flip can orphan a
-        # concurrent replace's DML, which removes the whole pre-flip
-        # rebase walk / post-flip self-retract / restore machinery this
-        # loop used to carry (the N-writer stress showed their divergent
-        # histories were not always mergeable). Our data files are
+        # concurrent replace's DML (the N-writer stress showed divergent
+        # histories are not always mergeable). Our data files are
         # parent-independent: a rebase re-reads only manifest JSON.
         for _ in range(60):
             file_stats = dict(prev_stats)
@@ -1399,29 +1566,9 @@ def append_manifest_table(
                     if seen is not None:
                         _release_reservation(fs, vroot, version, jvm)
                         return seen
-                parent, man = None, None
-                if versions:
-                    parent = versions[-1]
-                    man = _read_manifest_or_none(fs, vroot, parent, jvm)
-                    if man is None:
-                        # tip retracted under us: reset the rebase state
-                        # BEFORE retrying — carrying the superseded
-                        # tip's prev_files into a parent=None commit
-                        # would resurrect a retracted/emptied table's
-                        # whole file list (review r11)
-                        parent = None
-                        prev_files, prev_stats, prev_ids = [], {}, []
-                        continue
-                if man is not None:
-                    prev_files = man["files"]
-                    prev_stats = man.get("file_stats", {})
-                    prev_ids = man.get("batch_ids", [])
-                    from pyspark.sql.types import StructType
-
-                    live = StructType.fromJson(json.loads(man["schema"]))
-                    target_schema = merge_schemas(live, target_schema)
-                else:
-                    prev_files, prev_stats, prev_ids = [], {}, []
+                parent, prev_files, prev_stats, prev_ids, target_schema = (
+                    _append_rebase(fs, vroot, jvm, label, target_schema)
+                )
         else:
             raise ConcurrentWriteError(
                 f"tip of {table_name} kept moving during append rebase"
@@ -1434,12 +1581,12 @@ def append_manifest_table(
     try:
         heal_manifest_table(spark, warehouse, table_name)
     except ConcurrentWriteError:
-        # a replace committed by ANOTHER writer is transiently orphaned
-        # (its owner retracts it momentarily); OUR append is durably
-        # committed — re-raising would make retry-driven callers append
-        # the same batch twice. The next writer/GC heals.
+        # heal found an orphan it cannot merge (crash debris or a
+        # legacy divergent history); OUR append is durably committed —
+        # re-raising would make retry-driven callers append the same
+        # batch twice. The next writer/GC heals or reports it.
         _log.warning(
-            "post-append heal of %s deferred: transient orphan replace",
+            "post-append heal of %s deferred: unmergeable orphan",
             table_name,
         )
     return version
@@ -1496,9 +1643,9 @@ def _resolve_manifest(
     fs, vroot, jvm, root: str, table_name: str, version: int | None
 ) -> tuple[int, dict]:
     """Resolve (version, manifest): the tip when ``version`` is None
-    (retract-tolerant via _resolve_tip), else the pinned version —
-    which fails LOUDLY when missing or retracted (time travel to a
-    retracted version has no consistent answer)."""
+    (vanish-tolerant via _resolve_tip), else the pinned version —
+    which fails LOUDLY when missing or GC'd (time travel to a
+    collected version has no consistent answer)."""
     if version is None:
         return _resolve_tip(fs, vroot, jvm, f"{table_name} ({root})")
     versions = _committed_manifest_versions(fs, vroot, jvm)
@@ -1514,7 +1661,7 @@ def _resolve_manifest(
     man = _read_manifest_or_none(fs, vroot, version, jvm)
     if man is None:
         raise FileNotFoundError(
-            f"manifest version {version} of {table_name} was retracted"
+            f"manifest version {version} of {table_name} was GC'd"
         )
     return version, man
 
@@ -1582,8 +1729,7 @@ def compact_manifest_table(
     manifest referencing ONLY the rewrite — readers of prior versions
     keep their file lists; nothing is deleted here (see gc). The commit
     records parent + carries every seen batch_id forward, so streaming
-    replay detection survives compaction; appends racing the compact are
-    re-applied by the post-commit heal.
+    replay detection survives compaction + GC.
 
     Concurrency: a compact's payload is a SNAPSHOT of its parent's exact
     contents, so — unlike appends, whose file unions commute — flipping
@@ -1593,76 +1739,25 @@ def compact_manifest_table(
     caught: a compact racing two DMLs orphaned both). The linearized
     commit (:class:`StaleParentError` from the lock) refuses exactly
     that flip; a lost race means the rewrite targeted superseded state,
-    so the whole compact retries from the new tip. Compaction is pure
-    optimization: contention resolution is simply give way. Raises
-    :class:`ConcurrentWriteError` after ``max_retries`` lost races —
-    maintenance callers retry or skip."""
-    root, vroot, droot = _paths(warehouse, table_name)
-    fs, _, jvm = _hadoop_fs(spark, root)
-    for _ in range(max_retries):
-        version = _reserve_version(fs, vroot, jvm)
-        try:
-            # rebase: the compacted parent is chosen AFTER the
-            # reservation, retract-tolerantly; the parent's file list is
-            # read ONCE and used for both the scan and the commit (no
-            # pinned re-read that a racing retraction could invalidate)
-            parent, man = _resolve_tip(
-                fs, vroot, jvm, f"{table_name} ({root})"
-            )
-            from pyspark.sql.types import StructType
+    so the whole compact retries from the new tip — the same
+    :func:`_replace_commit` loop as row-level DML, with every tip file
+    affected. Compaction is pure optimization: contention resolution is
+    simply give way. Raises :class:`ConcurrentWriteError` after
+    ``max_retries`` lost races — maintenance callers retry or skip."""
 
-            schema = StructType.fromJson(json.loads(man["schema"]))
-            files = man["files"]
-            current = (
-                spark.createDataFrame([], schema)
-                if not files
-                else spark.read.schema(schema).parquet(*files)
-            )
-            ddir = f"{droot}/v{version}"
-            try:
-                current.repartition(n_files).write.mode(
-                    "overwrite"
-                ).parquet(ddir)
-            except Exception as exc:
-                from popelines_spark.manifest_dml import (
-                    _is_missing_file_error,
-                )
+    def build(man, schema):
+        files = man["files"]
+        current = (
+            spark.read.schema(schema).parquet(*files)
+            if files
+            else spark.createDataFrame([], schema)
+        )
+        return files, current, schema
 
-                if not _is_missing_file_error(exc):
-                    raise
-                # the pinned tip's files were GC'd mid-rewrite: give way
-                # and recompact from the current tip
-                _release_reservation(fs, vroot, version, jvm)
-                continue
-            try:
-                _commit_manifest(
-                    spark, fs, vroot, version,
-                    _list_parquet(fs, ddir, jvm), man["schema"], jvm,
-                    parent=parent, op="compact",
-                    batch_ids=man.get("batch_ids", []),
-                )
-            except StaleParentError:
-                # a commit landed during the rewrite: the snapshot is of
-                # superseded state — recompact from the new tip
-                _release_reservation(fs, vroot, version, jvm)
-                continue
-        except Exception:
-            _release_reservation(fs, vroot, version, jvm)
-            raise
-        break
-    else:
-        raise ConcurrentWriteError(
-            f"compact on {table_name} lost {max_retries} races to "
-            "concurrent writers — retry in a quieter window"
-        )
-    try:
-        heal_manifest_table(spark, warehouse, table_name)
-    except ConcurrentWriteError:
-        _log.warning(
-            "post-compact heal of %s deferred: transient orphan replace",
-            table_name,
-        )
-    return version
+    return _replace_commit(
+        spark, warehouse, table_name, build,
+        max_retries=max_retries, op="compact", n_files=n_files,
+    )
 
 
 def cleanup_orphan_files(
@@ -1673,10 +1768,10 @@ def cleanup_orphan_files(
     abandoned_reclaim_sec: float | None = None,
 ) -> int:
     """Delete data files referenced by NO committed manifest — the
-    debris the orphaned-replace retract path deliberately leaves behind
-    (it keeps data files so an in-flight append parented on the
-    retracted manifest cannot commit a torn file list; see
-    manifest_dml._replace_commit). Returns the number of files removed.
+    debris of writes whose commit never landed: a replace or compact
+    that lost its race leaves its rewrite under ``data/v{N}`` (see
+    :func:`_replace_commit`), and a crashed writer leaves its batch.
+    Returns the number of files removed.
 
     Safety rules, both required:
       - a file is removable only if NO committed manifest lists it
@@ -1712,11 +1807,12 @@ def cleanup_orphan_files(
     The writer-in-flight fence runs TWICE — before and after building
     the referenced set — and the committed version SET must be identical
     across the build. A one-shot check goes stale mid-sweep: the traced
-    N-writer failure had a retracting append delete its old manifest
-    (files momentarily referenced by nothing) between the single marker
-    check and the sweep, and cleanup deleted data files the re-commit
-    then referenced. Any writer activity in the window leaves evidence —
-    a fresh marker (reserve always precedes retract) or a version-set
+    N-writer failure (under the pre-linearization protocol, whose
+    appends retracted and re-committed) had files momentarily
+    referenced by nothing between the single marker check and the
+    sweep, and cleanup deleted data files the re-commit then
+    referenced. Any writer activity in the window leaves evidence — a
+    fresh marker (reserve always precedes commit) or a version-set
     change — so the double fence catches it and the sweep aborts to the
     next cycle. Files younger than ``reservation_timeout_sec`` are also
     never deleted (vacuum retention): an unreferenced-looking young file
@@ -1738,8 +1834,8 @@ def cleanup_orphan_files(
 
     # any live reservation = an in-flight writer that may be about to
     # commit references to files this sweep would classify as orphans
-    # (e.g. an append parented on a just-retracted replace) — the only
-    # safe sweep is one with no FRESH reservation in flight
+    # (e.g. an append whose batch is written but not yet committed) —
+    # the only safe sweep is one with no FRESH reservation in flight
     if _fresh_reservation():
         return 0
     versions = _committed_manifest_versions(fs, vroot, jvm)
@@ -1750,9 +1846,9 @@ def cleanup_orphan_files(
     for v in versions:
         m = _read_manifest_or_none(fs, vroot, v, jvm)
         if m is None:
-            return 0  # retracted under the build: writer active, abort
+            return 0  # GC'd under the build: collector active, abort
         referenced.update(m["files"])
-    # second fence: a writer that started, retracted, or committed while
+    # second fence: a writer that started or committed while
     # the referenced set was building leaves a marker or changes the set
     if _fresh_reservation():
         return 0
@@ -1886,7 +1982,7 @@ def gc_manifest_table(
     for v in drop:
         m = _read_manifest_or_none(fs, vroot, v, jvm)
         if m is None:
-            continue  # retracted under us: nothing left to collect
+            continue  # a racing GC took it: nothing left to collect
         old = m["files"]
         fs.delete(HPath(f"{vroot}/{v}"), True)
         for f in old:

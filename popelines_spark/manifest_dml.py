@@ -22,8 +22,9 @@ not O(table).
 Concurrency: the manifest flip is LINEARIZED (manifest.py's commit
 lock) — a replace whose parent is no longer the tip is refused at the
 flip and the whole DML retries against the new tip (a lost-race rewrite
-is useless: it rewrote files of a superseded state). Appends racing a
-replace are never lost: their flip rebases the same way.
+is useless: it rewrote files of a superseded state). That loop is
+manifest._replace_commit, which compaction shares. Appends racing a
+replace are never lost: their flip rebases on the new tip's metadata.
 
 Reference basis: the reference reaches DELETE/UPDATE/MERGE through
 BigQuery DML via bq_query (popelines/main.py:236-243); this is that DML
@@ -32,27 +33,12 @@ surface at lakehouse cost on a bare object store.
 
 from __future__ import annotations
 
-import json
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from popelines_spark.manifest import (
-    ConcurrentWriteError,
-    StaleParentError,
-    _commit_manifest,
-    _committed_manifest_versions,
-    _crash_point,
-    _hadoop_fs,
-    _list_parquet,
-    _paths,
-    _read_manifest_or_none,
-    _release_reservation,
-    _reserve_version,
-    heal_manifest_table,
-)
-from popelines_spark.operators.par import rebalance_output
+from popelines_spark.manifest import _prune_files, _replace_commit
 from popelines_spark.schemas import merge_schemas
 
 
@@ -87,172 +73,6 @@ def _affected_files(
     )
     hit_canon = {_canon(r["_f"]) for r in hit}
     return [f for f in candidates if _canon(f) in hit_canon]
-
-
-class _Conflict(Exception):
-    pass
-
-
-def _is_missing_file_error(exc: Exception) -> bool:
-    """A scan that lost the race to GC (its pinned parent's files were
-    reclaimed mid-build) surfaces as a missing-path error from the
-    parquet reader. That is a CONCURRENCY event, not a caller error —
-    the standard lakehouse contract (Iceberg/Delta concurrent writers
-    re-validate and retry after a vacuum) — so callers map it to a
-    rebase-and-retry instead of failing the DML."""
-    s = str(exc)
-    # match only the specific phrasings Spark's readers use for a
-    # vanished input path — the bare substring "does not exist" also
-    # appears in py4j "Method ... does not exist" signature errors and
-    # catalog "Table or view ... does not exist" errors, which are
-    # deterministic bugs that must SURFACE, not be retried as races
-    # (same rule as manifest._read_manifest_or_none)
-    # FAILED_READ_FILE is an UMBRELLA class that also covers corrupt
-    # footers and parquet type mismatches — deterministic failures that
-    # retrying as races would bury under a bogus ConcurrentWriteError
-    # (review r12); match only its vanished-file subclass
-    return (
-        "PATH_NOT_FOUND" in s
-        or "FileNotFoundException" in s
-        or "FAILED_READ_FILE.FILE_NOT_EXIST" in s
-        or "Path does not exist" in s
-    )
-
-
-def _replace_commit(
-    spark: SparkSession,
-    warehouse: str,
-    table_name: str,
-    build,  # (tip_manifest, schema) -> (affected, rewritten_df|None, extra_df|None, schema_out)
-    max_retries: int = 3,
-):
-    """Shared OCC skeleton for replace-type commits. ``build`` runs
-    against the rebased tip and returns which files to drop, the
-    rewrite of their surviving rows, an optional extra frame of brand-new
-    rows (MERGE inserts), and the (possibly evolved) output schema.
-    Retries the WHOLE operation against the new tip on conflict."""
-    from pyspark.sql.types import StructType
-
-    root, vroot, droot = _paths(warehouse, table_name)
-    fs, _, jvm = _hadoop_fs(spark, root)
-    HPath = jvm.org.apache.hadoop.fs.Path
-    last: Exception | None = None
-    healed_once = False
-    for _ in range(max_retries):
-        version = _reserve_version(fs, vroot, jvm)
-        try:
-            versions = _committed_manifest_versions(fs, vroot, jvm)
-            if not versions:
-                raise FileNotFoundError(
-                    f"no committed manifest versions under {root}"
-                )
-            parent = versions[-1]
-            man = _read_manifest_or_none(fs, vroot, parent, jvm)
-            if man is None:
-                # our chosen parent was retracted between listing and
-                # read — same treatment as a moved tip: retry afresh
-                raise _Conflict(f"parent {parent} retracted under read")
-            schema = StructType.fromJson(json.loads(man["schema"]))
-            try:
-                affected, rewritten, extra, schema_out = build(man, schema)
-                ddir = f"{droot}/v{version}"
-                new_files: list[str] = []
-                frames = [f for f in (rewritten, extra) if f is not None]
-                if frames:
-                    out = frames[0]
-                    for f in frames[1:]:
-                        out = out.unionByName(f, allowMissingColumns=True)
-                    # r13 (guide §6): the survivor rewrite otherwise
-                    # inherits one partition per affected input file, so
-                    # a CoW UPDATE touching N small files writes ~N small
-                    # files again — rebalance heals the layout instead of
-                    # perpetuating it (same sizing as the append path).
-                    out = rebalance_output(out)
-                    out.write.mode("overwrite").parquet(ddir)
-                    # debris: survivor rewrite on disk, commit never ran
-                    _crash_point("after_rewrite_write")
-                    new_files = _list_parquet(fs, ddir, jvm)
-            except Exception as exc:
-                if isinstance(exc, (_Conflict, _NoOp)) or not (
-                    _is_missing_file_error(exc)
-                ):
-                    raise
-                # the pinned parent's files were GC'd mid-build: rebase
-                # onto the current tip and rebuild against live files
-                raise _Conflict(
-                    f"parent {parent} files reclaimed by GC mid-build"
-                ) from exc
-            affected_set = set(affected)
-            files = [f for f in man["files"] if f not in affected_set]
-            files += new_files
-            file_stats = {
-                f: s
-                for f, s in man.get("file_stats", {}).items()
-                if f not in affected_set
-            }
-            # cheap early check before taking the commit lock: a racing
-            # commit since the rebase read means our rewrite targeted a
-            # stale tip (the lock would refuse it anyway — this just
-            # skips the lock round-trip for definitely-stale flips)
-            now = _committed_manifest_versions(fs, vroot, jvm)
-            if now and now[-1] != parent:
-                raise _Conflict(f"tip moved {parent} -> {now[-1]}")
-            try:
-                _commit_manifest(
-                    spark, fs, vroot, version, files,
-                    json.dumps(schema_out.jsonValue()), jvm,
-                    parent=parent, op="replace",
-                    batch_ids=man.get("batch_ids", []),
-                    file_stats=file_stats,
-                )
-            except StaleParentError as exc:
-                # the linearized flip refused a stale parent: the
-                # rewrite targeted superseded state — retry the whole
-                # DML against the new tip. (This closed the
-                # near-simultaneous-walk race where two replaces flipped
-                # parented on the same manifest and neither's own
-                # post-commit walk saw the other.)
-                raise _Conflict(str(exc)) from exc
-            try:
-                heal_manifest_table(spark, warehouse, table_name)
-            except Exception:
-                # OUR replace is durably on the tip; NO best-effort heal
-                # failure (transient orphan ConcurrentWriteError, a
-                # racing retraction's FileNotFoundError, reservation
-                # churn) may convert this success into a caller-visible
-                # failure — an application-level retry of a
-                # non-idempotent UPDATE would double-apply (review r12).
-                # The next writer/GC heals.
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "post-replace heal of %s deferred", table_name,
-                    exc_info=True,
-                )
-            return version
-        except _Conflict as exc:
-            _release_reservation(fs, vroot, version, jvm)
-            last = exc
-            # heal once, on the FIRST conflict only: under linearized
-            # commits a refused flip leaves nothing of OURS to repair —
-            # the heal exists for pre-linearization/crash debris that
-            # may be blocking the table, and that either heals on the
-            # first pass or needs the loud post-retry failure. Healing
-            # on every conflict paid an O(all manifests) scan per lost
-            # race for a removed failure mode (review r11).
-            if not healed_once:
-                healed_once = True
-                try:
-                    heal_manifest_table(spark, warehouse, table_name)
-                except (ConcurrentWriteError, FileNotFoundError):
-                    pass
-            continue
-        except Exception:
-            _release_reservation(fs, vroot, version, jvm)
-            raise
-    raise ConcurrentWriteError(
-        f"replace on {table_name} lost {max_retries} optimistic races"
-    ) from last
 
 
 def _count_and_validate_set_exprs(
@@ -344,6 +164,21 @@ class _NoOp(Exception):
         self.version = version
 
 
+def _target_files(
+    spark: SparkSession, man: dict, schema, cond, prune
+) -> tuple[list[str], DataFrame]:
+    """DELETE/UPDATE targeting against the tip manifest: recorded-stats
+    pruning, then :func:`_affected_files`; returns the affected files
+    and their rows. Raises :class:`_NoOp` when no file matches."""
+    # prune from the manifest ALREADY IN HAND: a pinned re-read would
+    # cost extra listings per retry
+    candidates = _prune_files(man, prune)
+    affected = _affected_files(spark, schema, candidates, cond)
+    if not affected:
+        raise _NoOp(man["version"])
+    return affected, spark.read.schema(schema).parquet(*affected)
+
+
 def delete_manifest_rows(
     spark: SparkSession,
     warehouse: str,
@@ -362,20 +197,10 @@ def delete_manifest_rows(
     def build(man, schema):
         nonlocal n_deleted
         cond = F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False))
-        candidates = man["files"]
-        if prune:
-            from popelines_spark.manifest import _prune_files
-
-            # prune from the manifest ALREADY IN HAND: a pinned re-read
-            # races the retract path and costs extra listings per retry
-            candidates = _prune_files(man, prune)
-        affected = _affected_files(spark, schema, candidates, cond)
-        if not affected:
-            raise _NoOp(man["version"])
-        src = spark.read.schema(schema).parquet(*affected)
+        affected, src = _target_files(spark, man, schema, cond, prune)
         n_deleted = src.where(cond).count()  # assign: retries rebuild
         kept = src.where(~cond)
-        return affected, kept, None, schema
+        return affected, kept, schema
 
     try:
         v = _replace_commit(spark, warehouse, table_name, build)
@@ -407,17 +232,7 @@ def update_manifest_rows(
                 f"UPDATE of non-existent column(s): {sorted(unknown)}"
             )
         cond = F.expr(predicate)
-        candidates = man["files"]
-        if prune:
-            from popelines_spark.manifest import _prune_files
-
-            # prune from the manifest ALREADY IN HAND: a pinned re-read
-            # races the retract path and costs extra listings per retry
-            candidates = _prune_files(man, prune)
-        affected = _affected_files(spark, schema, candidates, cond)
-        if not affected:
-            raise _NoOp(man["version"])
-        src = spark.read.schema(schema).parquet(*affected)
+        affected, src = _target_files(spark, man, schema, cond, prune)
         # cast each SET expression back to the column's DECLARED type:
         # a type-drifting expression (cnt/2 on a LONG returns DOUBLE)
         # coerced the whole output column, wrote DOUBLE parquet under a
@@ -436,7 +251,7 @@ def update_manifest_rows(
             src, cond, set_exprs, types
         )
         updated = _apply_set_exprs(src, cond, set_exprs, types)
-        return affected, updated, None, schema
+        return affected, updated, schema
 
     try:
         v = _replace_commit(spark, warehouse, table_name, build)
@@ -508,6 +323,6 @@ def upsert_manifest_table(
             tgt_hit = spark.createDataFrame([], schema)
         merged = _merge(tgt_hit, src, keys)
         merged = _align_to(merged, target_schema)
-        return affected, merged, None, merged.schema
+        return affected, merged, target_schema
 
     return _replace_commit(spark, warehouse, table_name, build)

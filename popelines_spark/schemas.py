@@ -84,9 +84,12 @@ def merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
 def _merge_type(old: T.DataType, new: T.DataType) -> T.DataType:
     if isinstance(old, T.StructType) and isinstance(new, T.StructType):
         return merge_schemas(old, new)
+    # element/value nullability relaxes like field nullability: if
+    # either side may hold NULL elements, the merged type must too
     if isinstance(old, T.ArrayType) and isinstance(new, T.ArrayType):
         return T.ArrayType(
-            _merge_type(old.elementType, new.elementType), old.containsNull
+            _merge_type(old.elementType, new.elementType),
+            old.containsNull or new.containsNull,
         )
     if isinstance(old, T.MapType) and isinstance(new, T.MapType):
         # struct fields inside map VALUES evolve add-only like everywhere
@@ -95,7 +98,7 @@ def _merge_type(old: T.DataType, new: T.DataType) -> T.DataType:
         return T.MapType(
             old.keyType,
             _merge_type(old.valueType, new.valueType),
-            old.valueContainsNull,
+            old.valueContainsNull or new.valueContainsNull,
         )
     return old  # old type wins (popelines/main.py:87)
 

@@ -33,9 +33,19 @@ def _restore_spark_conf(request):
         yield
         return
     spark = request.getfixturevalue("spark")
-    before = {r["key"]: r["value"] for r in spark.sql("SET").collect()}
+    before = conf_snapshot(spark)
     yield
-    after = {r["key"]: r["value"] for r in spark.sql("SET").collect()}
+    conf_restore(spark, before)
+
+
+def conf_snapshot(spark) -> dict:
+    """The session's runtime SQL confs, as ``SET`` lists them."""
+    return {r["key"]: r["value"] for r in spark.sql("SET").collect()}
+
+
+def conf_restore(spark, before: dict) -> None:
+    """Put the session's SQL confs back to a :func:`conf_snapshot`."""
+    after = conf_snapshot(spark)
     for k, v in after.items():
         if before.get(k) != v:
             try:

@@ -43,7 +43,7 @@ def test_upsert_matches_null_keys(spark, scratch):
 
 
 def test_missing_file_matcher_excludes_corruption_classes():
-    from popelines_spark.manifest_dml import _is_missing_file_error
+    from popelines_spark.manifest import _is_missing_file_error
 
     assert _is_missing_file_error(
         Exception("[FAILED_READ_FILE.FILE_NOT_EXIST] gone")
@@ -64,7 +64,7 @@ def test_durable_update_survives_post_commit_heal_failure(
     """Review r12: a post-commit heal exception must not report an
     already-committed DML as failed (an app-level retry of a
     non-idempotent UPDATE would double-apply)."""
-    import popelines_spark.manifest_dml as dml
+    import popelines_spark.manifest as M
 
     df = spark.createDataFrame([(1, 10)], "id long, cnt long")
     append_manifest_table(spark, scratch, "ph", df)
@@ -72,7 +72,7 @@ def test_durable_update_survives_post_commit_heal_failure(
     def boom(*a, **kw):
         raise RuntimeError("manifest reservation spinning")
 
-    monkeypatch.setattr(dml, "heal_manifest_table", boom)
+    monkeypatch.setattr(M, "heal_manifest_table", boom)
     v, n = update_manifest_rows(
         spark, scratch, "ph", {"cnt": "cnt + 1"}, "id = 1"
     )

@@ -5,29 +5,22 @@ round; round 9 shipped without rotating `_DRIVER_WINDOW_FIRST` and
 burned its 50 slots re-proving already-green entries (VERDICT r9 #1).
 This test is the round-opening checklist item in executable form: when
 a new CORRECTNESS_r{N}.json lands (i.e. a new round starts), the window
-computed from the scoring history changes and this test XFAILs (with a
+computed from the scoring history changes and this test FAILs (with a
 loud console warning) until `python tools/rotate_window.py` output is
-pasted into registry.py.  It is ``xfail(strict=False)`` per VERDICT
-r12 nit #2 so a stale window never reads as a broken tree to someone
-who hasn't read this docstring — the rotation demand shows up as an
-``XFAIL`` plus a stderr banner instead of a red ``FAILED``.
+pasted into registry.py.  It once carried ``xfail(strict=False)``
+(VERDICT r12 nit #2), but a non-strict xfail can never fail, so a
+stale window went unnoticed; it is a plain test again.
 No Spark session needed — pure JSON + registry import.
 """
 
 import sys
 import warnings
 
-import pytest
-
 sys.path.insert(0, "/root/repo/tools") if "/root/repo/tools" not in sys.path else None
 
 from rotate_window import canonical_window, scored_rounds  # noqa: E402
 
 
-@pytest.mark.xfail(
-    strict=False,
-    reason="driver window stale for this round — run tools/rotate_window.py",
-)
 def test_driver_window_is_canonical():
     import __spark_entry__ as e
     from popelines_spark.registry import _DRIVER_WINDOW_FIRST

@@ -153,6 +153,23 @@ def test_upsert_merges_and_spares_unmatched_files(spark, scratch):
     assert read_manifest_table(spark, scratch, "m1", version=3).count() == 150
 
 
+
+def test_upsert_added_column_is_stored_nullable(spark, scratch):
+    """A column added by a MERGE source is NULL in every target row the
+    source did not match, so the manifest records it nullable."""
+    import json
+
+    base = spark.range(4).select(F.col("id"), F.lit("a").alias("tag"))
+    append_manifest_table(spark, scratch, "mun", base)
+    src = spark.range(2, 6).select(
+        F.col("id"), F.lit("b").alias("tag"), F.lit("p").alias("promo")
+    )
+    v = upsert_manifest_table(spark, scratch, "mun", src, keys=["id"])
+    with open(f"{scratch}/mun/versions/{v}/manifest.json") as fh:
+        fields = json.loads(json.load(fh)["schema"])["fields"]
+    assert {f["name"]: f["nullable"] for f in fields}["promo"] is True
+
+
 def test_upsert_duplicate_source_keys_raise(spark, scratch):
     import pytest as _pytest
 

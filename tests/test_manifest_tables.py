@@ -48,6 +48,61 @@ def test_schema_evolution_applies_on_read(spark, scratch):
     assert now.where(F.col("x") == 5).count() == 3
 
 
+
+def _stored_nullability(scratch, name, version):
+    """{column: nullable} as the version's manifest.json records it."""
+    import json
+
+    with open(f"{scratch}/{name}/versions/{version}/manifest.json") as fh:
+        doc = json.load(fh)
+    return {
+        f["name"]: f["nullable"]
+        for f in json.loads(doc["schema"])["fields"]
+    }
+
+
+def test_appended_column_is_stored_nullable(spark, scratch):
+    """A column added by an append is NULL in every older file, so the
+    manifest must record it nullable even when the batch computed it
+    from a non-null expression."""
+    append_manifest_table(spark, scratch, "mn", _mk(spark, 4, "a"))
+    v = append_manifest_table(
+        spark, scratch, "mn", _mk(spark, 3, "b").select(
+            "id", "tag", F.lit("p").alias("promo")
+        ),
+    )
+    assert _stored_nullability(scratch, "mn", v)["promo"] is True
+
+
+def test_null_free_append_keeps_column_nullable(spark, scratch):
+    """A batch with no NULLs must not flip a nullable column to
+    NOT NULL: older files may hold NULLs in it."""
+    seed = spark.createDataFrame([(1, None)], "id long, tag string")
+    v1 = append_manifest_table(spark, scratch, "mk", seed)
+    assert _stored_nullability(scratch, "mk", v1)["tag"] is True
+    v2 = append_manifest_table(spark, scratch, "mk", _mk(spark, 3, "b"))
+    assert _stored_nullability(scratch, "mk", v2)["tag"] is True
+
+
+
+def test_append_of_null_elements_relaxes_array_type(spark, scratch):
+    """The merged schema, not the table's old one, bounds what a batch
+    may hold: NULL array elements in a batch make the recorded element
+    type nullable even when the table started without any."""
+    import json
+
+    first = spark.range(2).select(F.array(F.col("id")).alias("a"))
+    append_manifest_table(spark, scratch, "ma", first)
+    nulls = spark.range(2).select(
+        F.array(F.lit(None).cast("long")).alias("a")
+    )
+    v = append_manifest_table(spark, scratch, "ma", nulls)
+    with open(f"{scratch}/ma/versions/{v}/manifest.json") as fh:
+        fields = json.loads(json.load(fh)["schema"])["fields"]
+    assert fields[0]["type"]["containsNull"] is True
+    assert read_manifest_table(spark, scratch, "ma").count() == 4
+
+
 def test_compaction_and_gc_respect_retention(spark, scratch):
     """Compact → new single-file-set version; GC beyond retention
     deletes exactly the data files no retained manifest references,

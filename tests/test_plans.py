@@ -2,6 +2,7 @@
 on (SURVEY.md §4) actually fire on the registered queries."""
 
 import __spark_entry__ as entrymod
+import pytest
 from pyspark.sql import functions as F
 
 from popelines_spark.plans.inspect import (
@@ -12,11 +13,32 @@ from popelines_spark.plans.inspect import (
     plan_report,
     unpartitioned_windows,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, conf_restore, conf_snapshot
 
 
 def _q(name, spark):
     return entrymod.queries()[name](spark, SF_DIR)
+
+
+@pytest.fixture(scope="module")
+def registry_plans(spark):
+    """Every registered query built ONCE for the registry-wide rules:
+    name -> (unpartitioned window specs, physical plan string), or the
+    exception its build/plan raised. Module-scoped, so it is set up
+    before the autouse per-test conf snapshot: it snapshots and
+    restores the session's SQL confs around the build loop itself."""
+    before = conf_snapshot(spark)
+    out = {}
+    try:
+        for name, fn in entrymod.queries().items():
+            try:
+                df = fn(spark, SF_DIR)
+                out[name] = (unpartitioned_windows(df), physical_plan(df))
+            except Exception as exc:  # plan-build failure is its own offense
+                out[name] = exc
+    finally:
+        conf_restore(spark, before)
+    return out
 
 
 def test_flagship_broadcasts_and_prunes(spark):
@@ -165,19 +187,16 @@ def test_tpch_q15_no_global_rank_window(spark):
     assert not rep["cartesian"]
 
 
-def test_no_unpartitioned_window_anywhere(spark):
+def test_no_unpartitioned_window_anywhere(registry_plans):
     """Registry-wide scale rule (VERDICT r2 #9): NO registered query may
     move all rows through a single partition via a window with an empty
     PARTITION BY. Explains every registered query; allowlist: none."""
-    qs = entrymod.queries()
     offenders = {}
-    for name, fn in qs.items():
-        try:
-            df = fn(spark, SF_DIR)
-        except Exception as exc:  # plan-build failure is its own offense
-            offenders[name] = f"build failed: {exc}"
+    for name, got in registry_plans.items():
+        if isinstance(got, Exception):
+            offenders[name] = f"build failed: {got}"
             continue
-        bad = unpartitioned_windows(df)
+        bad, _plan = got
         if bad:
             offenders[name] = bad[0]
     assert not offenders, offenders
@@ -532,7 +551,7 @@ def test_round7_analytics_plans(spark):
     assert "MapInPandas" in plan or "ArrowEvalPython" in plan
 
 
-def test_no_cartesian_product_anywhere(spark):
+def test_no_cartesian_product_anywhere(registry_plans):
     """Registry-wide scale rule #2 (companion to the unpartitioned-window
     ban): NO registered query may plan an unbounded CartesianProduct.
     Deliberate small-side cross joins (recall stamps, one-row scalar
@@ -541,14 +560,12 @@ def test_no_cartesian_product_anywhere(spark):
     broadcast, i.e. a guaranteed scale-killer. Allowlist: none."""
     import re
 
-    qs = entrymod.queries()
     offenders = {}
-    for name, fn in qs.items():
-        try:
-            plan = physical_plan(fn(spark, SF_DIR))
-        except Exception as exc:
-            offenders[name] = f"build failed: {exc}"
+    for name, got in registry_plans.items():
+        if isinstance(got, Exception):
+            offenders[name] = f"build failed: {got}"
             continue
+        _windows, plan = got
         if re.search(r"CartesianProduct", plan):
             offenders[name] = "CartesianProduct"
     assert not offenders, offenders

@@ -87,6 +87,18 @@ class TestMergeSchemas:
         merged = merge_schemas(old, new)
         assert schema_paths(merged) == ["items.sku", "items.qty"]
 
+    def test_element_nullability_relaxes(self):
+        # a batch with NULL array elements / map values must not be
+        # recorded under a schema that promises none
+        old = S(("a", T.ArrayType(T.LongType(), False)),
+                ("m", T.MapType(T.StringType(), T.LongType(), False)))
+        new = S(("a", T.ArrayType(T.LongType(), True)),
+                ("m", T.MapType(T.StringType(), T.LongType(), True)))
+        merged = merge_schemas(old, new)
+        assert merged["a"].dataType.containsNull
+        assert merged["m"].dataType.valueContainsNull
+        assert not merge_schemas(old, old)["a"].dataType.containsNull
+
     def test_idempotent_and_self_identity(self):
         old = S(("a", T.LongType()), ("b", S(("c", T.StringType()))))
         assert merge_schemas(old, old) == old
