@@ -902,6 +902,8 @@ def _replace_commit(
     rewrite lands in ``data/v{N}`` — ``n_files`` files when given, else
     rebalance-sized — and the manifest is the tip's files minus the
     affected ones plus the rewrite, carrying every batch id forward.
+    A ``build`` that returns ``None`` has nothing to rewrite: the
+    reservation is released and the tip version returned, uncommitted.
 
     Unlike an append, whose files are parent-independent, the payload
     targeted one exact state, so a lost race gives way: a flip refused
@@ -924,7 +926,11 @@ def _replace_commit(
             schema = StructType.fromJson(json.loads(man["schema"]))
             ddir = f"{droot}/v{version}"
             try:
-                affected, rewritten, schema_out = build(man, schema)
+                built = build(man, schema)
+                if built is None:
+                    _release_reservation(fs, vroot, version, jvm)
+                    return parent
+                affected, rewritten, schema_out = built
                 # r13 (guide §6): the survivor rewrite otherwise
                 # inherits one partition per affected input file, so
                 # a CoW UPDATE touching N small files writes ~N small
@@ -1743,10 +1749,17 @@ def compact_manifest_table(
     :func:`_replace_commit` loop as row-level DML, with every tip file
     affected. Compaction is pure optimization: contention resolution is
     simply give way. Raises :class:`ConcurrentWriteError` after
-    ``max_retries`` lost races — maintenance callers retry or skip."""
+    ``max_retries`` lost races — maintenance callers retry or skip.
+
+    A tip already at or below ``n_files`` files is left alone: nothing
+    is written or committed and the tip version is returned. Rewriting
+    it would buy nothing, and under a maintenance loop every such
+    rewrite is one more snapshot commit racing the table's DML."""
 
     def build(man, schema):
         files = man["files"]
+        if len(files) <= n_files:
+            return None
         current = (
             spark.read.schema(schema).parquet(*files)
             if files

@@ -14,6 +14,14 @@ web scale persist `ranks` per iteration and checkpoint every few rounds
 to truncate lineage — mirrored here with a lazy localCheckpoint every 3
 iterations (plans/inspect.py audits those side plans).
 
+:func:`pagerank` has a second path for graphs the caller asserts are
+small (``bounded_edges=True``): the prepared edges and node state are
+collected once and the rounds run on the driver in Python ``Decimal``,
+because ten dependent rounds over a few hundred rows are all Spark job
+scheduling and no data work. That path is bit-identical to the Spark
+loop (see the :func:`pagerank` docstring) and refuses edge sets over
+:data:`MAX_BOUNDED_EDGES`.
+
 Cross-engine determinism (the reason for DECIMAL state): IEEE double
 addition is order-sensitive, and a groupBy sum's order is not fixed, so
 double ranks would hash-drift between engines and even between runs.
@@ -27,14 +35,26 @@ a final 12dp rounding.  The only doubles are the two reciprocals
 
 from __future__ import annotations
 
-from decimal import Decimal
+from decimal import ROUND_HALF_UP, Context, Decimal, localcontext
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from popelines_spark.plans.inspect import checkpoint
+from popelines_spark.plans.inspect import audit_side_plan, checkpoint
 
 _DEC = "decimal(14,12)"
+
+#: Edge-row ceiling of ``pagerank(..., bounded_edges=True)``. Ten rounds
+#: over 100k random edges among 5,000 nodes take ~1.4 s of driver Python
+#: (4-core x86 host), and the collected rows hold a few tens of MB of
+#: driver memory. Larger graphs belong on the Spark loop.
+MAX_BOUNDED_EDGES = 100_000
+
+_Q12 = Decimal("1E-12")
+# enough digits that no product or sum of DECIMAL(14,12) values rounds
+# before the explicit 12dp quantize (Spark's products are exact too)
+_CTX = Context(prec=60, rounding=ROUND_HALF_UP)
 
 
 def pagerank(
@@ -45,54 +65,56 @@ def pagerank(
     node_col: str = "node",
     n_iter: int = 10,
     damping: float = 0.85,
-    broadcast_edges: bool = False,
+    bounded_edges: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over distinct ``edges`` (src, dst). Returns
     one (node_col, pr DECIMAL) row per DISTINCT node of ``nodes``: for
     ``n_iter`` >= 1 the per-iteration ``groupBy`` collapses duplicate
-    ``nodes`` rows. Pass distinct nodes all the same — n (and with it the
-    1/n start and the (1-d)/n base) counts rows, and a duplicated source
-    contributes once per copy in the first iteration.
+    ``nodes`` rows (a NULL node is one group and keeps the base rank).
+    Pass distinct nodes all the same — n (and with it the 1/n start and
+    the (1-d)/n base) counts rows, and a duplicated source contributes
+    once per copy in the first iteration. ``n_iter=0`` returns the start
+    state, one row per ``nodes`` row.
 
     Dangling nodes (no out-edges) contribute nothing — their mass leaks,
     so ranks sum to < 1 when danglers exist (documented classic variant).
     Use :func:`pagerank_redistributed` for the mass-conserving variant
     (one broadcast scalar per iteration).
 
-    r13 examined (tools/exp_pagerank.py @ b9babdb): replacing the per-iteration
-    init⋈inflow broadcast join with a union + keyed RE-aggregate (a
-    SECOND exchange after the inflow aggregate) measured SLOWER — 4.28
-    vs 3.54 s interleaved minima at sf0.1. r14 ships the shape that
-    experiment pointed at but did not try: union the static zero-rank
-    rows INTO the inflow aggregate's input, so the base term folds into
-    the one per-iteration exchange and the update join disappears —
-    NOT a second aggregate. Per-iteration plan: one keyed join (ranks ⋈
-    edges) + ONE keyed aggregate + a projection; the only per-iteration
-    driver work left is that aggregate's AQE stage job (the r13 profile
-    showed ~5 tiny jobs/iteration — broadcast builds of the changing
-    rank/inflow sides + the update join — with 30-60 ms driver gaps
-    between them dominating the query, plans/r14/profile_report.json).
-    ``broadcast_edges=True`` additionally pins the contrib join's build
-    side to the STATIC checkpointed edge relation, so its broadcast is
-    built once per lineage segment (ReusedExchange) instead of
-    rebuilding the changing rank side every iteration. Callers assert
-    their edge relation is bounded when they pass it (c_pagerank_nations:
-    ≤ |nations|² rows by construction); the default keeps the planner's
-    choice — at web scale neither side broadcasts and the join degrades
-    to the usual shuffled form, exactly as before.
+    Edges whose dst is OUTSIDE ``nodes`` are dropped at the edge build
+    (left_semi against nodes) AFTER the degree join, so out-degree still
+    counts them: their share of the source's rank leaks. Edges with a
+    NULL src or dst never match and are dropped.
 
-    Decimal equivalence of the fold (the output must stay bit-identical
-    to the r13 form — the DuckDB oracle mirrors it term by term): the
-    zero rows add an exact decimal 0 to each node's contribution sum, so
-    sum-with-zero == sum (decimal addition is exact), and a node with no
-    inflow now sums to 0 instead of NULL — (damping × 0) narrowed to
-    12dp is 0, the same value the old coalesce supplied. Nodes with no
-    inflow appear exactly once in the zero rows, so the row set is
-    unchanged. Edges whose dst is OUTSIDE ``nodes`` are dropped once at
-    the checkpointed edge build (left_semi against nodes) — the r13 form
-    dropped those contributions per iteration at the update join
-    instead, AFTER they consumed out-degree; out-degree still counts
-    them here because the semi-join runs after the degree join.
+    Two paths compute the same rows, chosen by ``bounded_edges``:
+
+    - ``False`` (default): a Spark loop. Per iteration one keyed join
+      (ranks ⋈ edges on src) and ONE keyed aggregate over the
+      contributions unioned with one zero row per node, so every node
+      surfaces in the aggregate and the base term needs no update join.
+      The edge build is checkpointed once and the rank state every 3
+      iterations.
+    - ``True``: the caller asserts the edge relation is small. Spark
+      still builds every decimal input — the 1/n start, the (1-d)/n base,
+      ``1/out_degree`` cast to DECIMAL(13,12), the degree join and the
+      dst semi-join — and ships them in two collects, (src, dst, recip)
+      and (node, pr0, base). The rounds then run on the driver and the
+      result comes back as a local DataFrame: two collects for the
+      whole loop instead of a few Spark jobs per iteration. More than
+      :data:`MAX_BOUNDED_EDGES` collected edges raise ``ValueError``
+      (checked on the collected list, so the guard adds no job); at the
+      ceiling ten rounds cost ~1.4 s of driver Python.
+
+    The driver loop is bit-identical to the Spark loop because it applies
+    Spark's decimal rules step by step and never converts a double:
+
+    - each contribution is ``pr * recip`` (exact) quantized to 12dp
+      HALF_UP — the DECIMAL(14,12) cast of the Spark product;
+    - the per-node inflow is an exact decimal sum starting at 0 for
+      every node, as the zero rows do in Spark;
+    - the update is ``base + (damping * inflow)`` with the product
+      quantized to 12dp HALF_UP, and ``damping`` itself rounded to
+      DECIMAL(3,2) as Spark's literal cast does.
     """
     # Pin the literal's decimal type: Python Decimal lits default to
     # DecimalType(38,18), whose product with (14,12) overflows precision 38
@@ -110,13 +132,8 @@ def pagerank(
     base_row = n.select(
         (F.lit(base_lit) / F.col("__n")).cast(_DEC).alias("__base")
     )
-    zero = F.lit(Decimal(0)).cast(_DEC)
-    # one zero-contribution row per node: guarantees every node surfaces
-    # in the per-iteration aggregate (replacing the old left join's
-    # null-side) without changing any sum
-    zero_rows = nodes.select(F.col(node_col), zero.alias("__c"))
     deg = edges.groupBy(src).agg(F.count("*").alias("__d"))
-    e = checkpoint(
+    e = (
         edges.join(deg, src)
         .join(
             nodes.select(F.col(node_col).alias("__dst_ok")),
@@ -127,12 +144,20 @@ def pagerank(
             F.col(src),
             F.col(dst),
             (F.lit(1.0) / F.col("__d")).cast("decimal(13,12)").alias("__recip"),
-        ),
-        "pagerank-edges",
-        eager=False,
+        )
     )
-    if broadcast_edges:
-        e = F.broadcast(e)
+    if bounded_edges:
+        return _pagerank_on_driver(
+            e, init.crossJoin(F.broadcast(base_row)), dst, node_col,
+            n_iter, Decimal(str(damping)).quantize(
+                Decimal("0.01"), ROUND_HALF_UP
+            ),
+        )
+    e = checkpoint(e, "pagerank-edges", eager=False)
+    zero = F.lit(Decimal(0)).cast(_DEC)
+    # one zero-contribution row per node: guarantees every node surfaces
+    # in the per-iteration aggregate without changing any sum
+    zero_rows = nodes.select(F.col(node_col), zero.alias("__c"))
     ranks = init
     for i in range(n_iter):
         contrib = ranks.join(e, ranks[node_col] == e[src]).select(
@@ -157,6 +182,50 @@ def pagerank(
         if i % 3 == 2 and i < n_iter - 1:
             ranks = checkpoint(ranks, f"pagerank-iter{i}", eager=False)
     return ranks.select(node_col, "pr")
+
+
+def _pagerank_on_driver(
+    e: DataFrame,
+    state: DataFrame,
+    dst: str,
+    node_col: str,
+    n_iter: int,
+    damping: Decimal,
+) -> DataFrame:
+    """The ``bounded_edges=True`` rounds of :func:`pagerank`: ``e`` is the
+    prepared (src, dst, __recip) edge build, ``state`` the (node_col, pr,
+    __base) start state; both are executed once, here."""
+    edge_rows = audit_side_plan(e, "pagerank-edges").collect()
+    if len(edge_rows) > MAX_BOUNDED_EDGES:
+        raise ValueError(
+            f"pagerank(bounded_edges=True): {len(edge_rows)} edges exceed "
+            f"MAX_BOUNDED_EDGES={MAX_BOUNDED_EDGES}; use the default path"
+        )
+    state_rows = state.collect()
+    # a round's node column is the union of dst and node (as in the Spark
+    # loop's aggregate), so its type is the widened one of the two
+    keyed = state.select(node_col)
+    if n_iter:
+        keyed = e.select(F.col(dst).alias(node_col)).unionByName(keyed)
+    out_schema = StructType([keyed.schema[0], state.schema["pr"]])
+    out_edges: dict = {}
+    for s, d, recip in edge_rows:
+        out_edges.setdefault(s, []).append((d, recip))
+    # every (node, pr) row feeds the first round, duplicates included
+    ranks = [(r[0], r[1]) for r in state_rows]
+    base = state_rows[0][2] if state_rows else None
+    keys = list(dict.fromkeys(r[0] for r in state_rows))
+    with localcontext(_CTX):
+        for _ in range(n_iter):
+            inflow = dict.fromkeys(keys, Decimal(0))
+            for node, pr in ranks:
+                for d, recip in out_edges.get(node, ()):
+                    inflow[d] += (pr * recip).quantize(_Q12)
+            ranks = [
+                (node, base + (damping * inflow[node]).quantize(_Q12))
+                for node in keys
+            ]
+    return e.sparkSession.createDataFrame(ranks, out_schema)
 
 
 def pagerank_redistributed(

@@ -651,10 +651,6 @@ class Popeline:
                 for f in man["files"]
             )
             n_files = max(1, math.ceil(total / target_file_bytes))
-            if files_before <= n_files:
-                # already at (or below) the target file count — an
-                # O(table) rewrite would buy nothing
-                return files_before, files_before
             compact_manifest_table(
                 self.spark, self.warehouse, table_name, n_files=n_files
             )

@@ -408,7 +408,7 @@ def c_pagerank_nations(spark, sf_dir):
     strictly more line items than the average ordered pair (the
     sparsifier that gives the complete 25-node graph varied degrees at
     every SF). operators/graph.py:pagerank carries the decimal-exactness
-    and per-iteration shuffle notes."""
+    notes and the bounded-edges driver path this query takes."""
     from popelines_spark.operators.graph import pagerank
 
     li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -435,10 +435,10 @@ def c_pagerank_nations(spark, sf_dir):
     ranks = pagerank(
         edges, nation.select(F.col("n_nationkey").alias("node")),
         node_col="node", n_iter=10, damping=0.85,
-        # the trade graph is ≤ |nations|² rows by construction: pin the
-        # contrib join's build side to the STATIC edge relation so its
-        # broadcast is reused across iterations (operators/graph.py r14)
-        broadcast_edges=True,
+        # the trade graph is ≤ |nations|² rows by construction, so the
+        # ten rounds run on the driver over the collected edges
+        # (operators/graph.py: bit-identical to the Spark loop)
+        bounded_edges=True,
     )
     return ranks.join(
         F.broadcast(nation), ranks.node == nation.n_nationkey

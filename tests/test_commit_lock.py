@@ -176,7 +176,10 @@ def test_commit_arbiter_seam_is_used_by_every_commit_path(spark, scratch):
             spark, scratch, "arb", spark.range(5, 9).selectExpr("id")
         )
         assert len(rec.calls) > n_after_append
-        compact_manifest_table(spark, scratch, "arb")
+        # n_files=1: the two appends' files are more than that, so the
+        # compaction rewrites and commits (a tip already at n_files or
+        # fewer files is left alone, uncommitted)
+        compact_manifest_table(spark, scratch, "arb", n_files=1)
         assert len(rec.calls) > n_after_append + 1
         assert all("arb/versions" in v for v in rec.calls)
         assert read_manifest_table(spark, scratch, "arb").count() == 9

@@ -109,9 +109,12 @@ def test_changefeed_arrow_batches_evolved_table(spark, scratch, tmp_path):
 
 def test_changefeed_skips_compaction(spark, scratch, tmp_path):
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
-    append_manifest_table(spark, scratch, "cfc", _mk(spark, 0, 10, "a"))
+    # two files, so compacting to one commits a compaction version
+    append_manifest_table(
+        spark, scratch, "cfc", _mk(spark, 0, 10, "a"), n_files=2
+    )
     _drain(spark, read_changefeed(spark, scratch, "cfc"), ckpt, out)
-    compact_manifest_table(spark, scratch, "cfc", n_files=1)
+    assert compact_manifest_table(spark, scratch, "cfc", n_files=1) == 2
     got = _drain(spark, read_changefeed(spark, scratch, "cfc"), ckpt, out)
     assert got.count() == 10  # compaction moves bytes, not rows
 

@@ -138,6 +138,30 @@ def test_compaction_and_gc_respect_retention(spark, scratch):
     assert glob.glob(f"{scratch}/mg/data/v1/*.parquet") == []
 
 
+def test_compact_of_compact_tip_commits_nothing(spark, scratch):
+    """A second compaction of a tip already at ``n_files`` files is a
+    no-op: the version list, the data directories and the reservation
+    markers are exactly as the first compaction left them, and the call
+    returns the tip version."""
+    for i in range(3):
+        append_manifest_table(
+            spark, scratch, "mc", _mk(spark, 10, f"b{i}"), n_files=2
+        )
+    vc = compact_manifest_table(spark, scratch, "mc", n_files=1)
+
+    def state():
+        return (
+            sorted(os.listdir(f"{scratch}/mc/versions")),
+            sorted(os.listdir(f"{scratch}/mc/data")),
+        )
+
+    before = state()
+    assert compact_manifest_table(spark, scratch, "mc", n_files=1) == vc
+    assert state() == before
+    assert not glob.glob(f"{scratch}/mc/versions/*.__reserved")
+    assert read_manifest_table(spark, scratch, "mc").count() == 30
+
+
 def test_gc_keeps_files_shared_with_retained_versions(spark, scratch):
     """A dropped version's files survive if a retained version still
     lists them (append chains share files across versions)."""

@@ -307,9 +307,10 @@ def test_round5_analytics_plans(spark):
     # containment: candidate generation is the shingle equi-join — keyed
     # joins only, no cartesian anywhere
     assert_no_cartesian(_q("c_containment", spark))
-    # pagerank: 10 iterations of keyed join + keyed agg; no CartesianProduct
-    # (the 1/n scalar attaches via the sanctioned one-row broadcast
-    # nested-loop, so only the unbounded node is banned)
+    # pagerank: the bounded trade graph runs its rounds on the driver, so
+    # the returned plan is the ranked rows joined to the broadcast nation
+    # names; no CartesianProduct (the edge build and the 1/n scalar run
+    # as audited side plans when the query is built)
     assert not plan_report(_q("c_pagerank_nations", spark))["cartesian"]
     # attribution reuses the join-free asof union+window shape upstream of
     # one final keyed aggregation

@@ -7,7 +7,10 @@ hash-vs-DuckDB check is tools/parity.py's job.
 from __future__ import annotations
 
 import datetime as dt
+import random
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from popelines_spark.llm import dedup as D
@@ -188,6 +191,67 @@ def test_pagerank_ranks_each_distinct_node_once(spark):
     nodes = spark.createDataFrame([(0,), (1,), (1,)], "node int")
     got = sorted(r.node for r in pagerank(edges, nodes, n_iter=2).collect())
     assert got == [0, 1]
+
+
+def _random_graph(spark, seed, n_edges):
+    """Nodes 0..8 plus a duplicated row and a NULL node; random edges from
+    nodes 0..6 (7 and 8 dangle) plus one edge whose dst is outside."""
+    rng = random.Random(seed)
+    pairs = sorted(
+        {(rng.randrange(7), rng.randrange(9)) for _ in range(n_edges)}
+    )
+    if pairs:
+        pairs.append((0, 99))
+    edges = spark.createDataFrame(pairs, "src int, dst int")
+    nodes = spark.createDataFrame(
+        [(i,) for i in range(9)] + [(3,), (None,)], "node int"
+    )
+    return edges, nodes
+
+
+@pytest.mark.parametrize(
+    "seed,n_edges,n_iter", [(1, 20, 0), (2, 20, 1), (3, 25, 7), (4, 0, 7)]
+)
+def test_pagerank_bounded_path_matches_spark_loop(spark, seed, n_edges, n_iter):
+    from popelines_spark.operators.graph import pagerank
+
+    edges, nodes = _random_graph(spark, seed, n_edges)
+    loop = pagerank(edges, nodes, n_iter=n_iter)
+    driver = pagerank(edges, nodes, n_iter=n_iter, bounded_edges=True)
+
+    def rows(df):  # exact: str() keeps every decimal digit and the scale
+        return Counter((r.node, str(r.pr)) for r in df.collect())
+
+    assert driver.dtypes == loop.dtypes
+    assert rows(driver) == rows(loop)
+
+
+def test_pagerank_bounded_path_refuses_oversized_edges(spark, monkeypatch):
+    import popelines_spark.operators.graph as G
+
+    monkeypatch.setattr(G, "MAX_BOUNDED_EDGES", 2)
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], "src int, dst int")
+    nodes = spark.createDataFrame([(i,) for i in range(3)], "node int")
+    with pytest.raises(ValueError, match="3 edges"):
+        G.pagerank(edges, nodes, bounded_edges=True)
+
+
+def test_pagerank_bounded_path_audits_edge_build(spark, monkeypatch):
+    from pyspark.sql.window import Window as W
+
+    from popelines_spark.operators.graph import pagerank
+
+    monkeypatch.setenv("POPELINES_PLAN_AUDIT", "strict")
+    # dst comes out of a partition-less window, so the window stays in
+    # the edge build's plan
+    edges = (
+        spark.range(6)
+        .select(F.col("id").cast("int").alias("src"))
+        .withColumn("dst", (F.row_number().over(W.orderBy("src")) % 6).cast("int"))
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(6)], "node int")
+    with pytest.raises(AssertionError, match="pagerank-edges"):
+        pagerank(edges, nodes, bounded_edges=True)
 
 
 def test_attribution_channels_partition_purchases(spark):
